@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from webgraph_ans_rs_spark.session import get_spark  # noqa: E402
 
@@ -50,3 +52,38 @@ def seeded_random_graph(spark, n=200, m=800, seed=42):
     edges = spark.createDataFrame(sorted(es), "src long, dst long")
     verts = spark.createDataFrame([(i,) for i in range(n)], "vertex long")
     return edges, verts, sorted(es), n
+
+
+def weblike_edges(spark, n=1500, seed=3):
+    """Deterministic crawl-like edge frame: each list holds a short run of
+    following ids, often a sample of the previous list (the reference-copy
+    case), plus a few nearby ids."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for x in range(n):
+        base = set(range(x + 1, min(x + 1 + rng.randrange(0, 6), n)))
+        if rng.random() < 0.6 and rows:
+            base.update(rng.sample(rows[-1][1], min(len(rows[-1][1]), 5)))
+        base.update(
+            max(0, min(n - 1, x + rng.randrange(-100, 100)))
+            for _ in range(rng.randrange(0, 4))
+        )
+        base.discard(x)
+        if base:
+            rows.append((x, sorted(base)))
+    return spark.createDataFrame(
+        [(s, d) for s, l in rows for d in l], "src long, dst long"
+    )
+
+
+def hashed_ids(edges):
+    """Re-key an edge frame by xxhash64: ids spread over the full int64
+    range, the regime where codec arithmetic must wrap mod 2^64."""
+    from pyspark.sql import functions as F
+
+    return edges.select(
+        F.xxhash64(F.col("src").cast("string")).alias("src"),
+        F.xxhash64(F.col("dst").cast("string")).alias("dst"),
+    )

@@ -4,9 +4,12 @@ operator file. Rebuild with tools/package_engine.py after source changes."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+from tests.conftest import REPO
+
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 from package_engine import check  # noqa: E402
 
@@ -20,7 +23,7 @@ def test_registry_fits_driver_sweep_cap():
     51 registered -> scc silently got none). Every registered query MUST
     get a row, so the registry is hard-capped at 50 — consolidate
     near-duplicate gates (successors_layouts pattern) before adding."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as e
 
     qs = e.queries()

@@ -1,8 +1,12 @@
 """gamma/zeta bit-packed ref layout: lossless round-trip, chunk
-independence, random access, and hashed-id wraparound."""
+independence, random access, hashed-id wraparound, and pinned payload
+bytes."""
 
 from __future__ import annotations
 
+import hashlib
+
+import pytest
 from pyspark.sql import functions as F
 
 from webgraph_ans_rs_spark.operators.bitpack import (
@@ -12,7 +16,7 @@ from webgraph_ans_rs_spark.operators.bitpack import (
 )
 from webgraph_ans_rs_spark.operators.graph_build import build_csr_adjacency
 
-from tests.conftest import seeded_random_graph
+from tests.conftest import hashed_ids, seeded_random_graph, weblike_edges
 
 
 def _adj_map(df):
@@ -63,11 +67,7 @@ def test_bitpack_hashed_full_range_ids(spark):
     """xxhash64 ids span the full signed-int64 range: src deltas, first
     residual gaps, and cumsum must all wrap mod 2^64 losslessly."""
     edges, _, _, _ = seeded_random_graph(spark, n=200, m=800)
-    hashed = edges.select(
-        F.xxhash64(F.col("src").cast("string")).alias("src"),
-        F.xxhash64(F.col("dst").cast("string")).alias("dst"),
-    )
-    adj = build_csr_adjacency(hashed).persist()
+    adj = build_csr_adjacency(hashed_ids(edges)).persist()
     packed = encode_refs_bitpacked(adj, num_buckets=4, chunk=32)
     got = _adj_map(decode_refs_bitpacked(packed))
     want = _adj_map(adj)
@@ -154,3 +154,56 @@ def test_component_bits_account_for_every_payload_bit(spark):
     packed.unpersist()
     assert comp["n_lists"] == 300
     assert 0 <= payload_bits - counted < 8 * n_chunks
+
+
+# sha256 over every packed row ordered by (bucket, chunk): the chunk header
+# fields, then the payload bytes. A faster encoder must write the same
+# bytes, so any change to the reference choice, block runs or residual gaps
+# shows up as a different digest.
+PACK_CONFIGS = {
+    "w7_r3": dict(window=7, max_ref=3, chunk=1024),
+    "w16_unbounded": dict(window=16, max_ref=2_000_000_000, chunk=1024),
+    "chunk16": dict(chunk=16),
+}
+GOLDEN_PACKED = {
+    ("weblike", "w7_r3"): (
+        "99ff0fde94e9e17a4d9557b6737e873f"
+        "ef4edfa43463de56173749f6e3899ae7"
+    ),
+    ("weblike", "w16_unbounded"): (
+        "cd5d811ba954647dfd12953574dd959d"
+        "0e43bee62689bc17a067130206ce05f0"
+    ),
+    ("weblike", "chunk16"): (
+        "c6f9862fd7731924ab2b996646753a1d"
+        "f37fe31b428ade78b12c959b2858633f"
+    ),
+    ("hashed", "w7_r3"): (
+        "2e3168db77228c3757f64c60af5cc371"
+        "ea1e98349733d8bb95dbf1b804b32749"
+    ),
+    ("hashed", "w16_unbounded"): (
+        "c695a4dd35f062744f26f52cebac5094"
+        "0ced34d9fbf3745ed010667cf997d534"
+    ),
+    ("hashed", "chunk16"): (
+        "c46bdc0916185ad732fc4f4eb4b3933f"
+        "bc41a618c791505f6e1883d2fdd8e3d4"
+    ),
+}
+
+
+@pytest.mark.parametrize("config", sorted(PACK_CONFIGS))
+@pytest.mark.parametrize("graph", ["weblike", "hashed"])
+def test_bitpack_golden_payload_bytes(spark, graph, config):
+    edges = weblike_edges(spark)
+    if graph == "hashed":
+        edges = hashed_ids(edges)
+    packed = encode_refs_bitpacked(
+        build_csr_adjacency(edges), num_buckets=4, **PACK_CONFIGS[config]
+    )
+    h = hashlib.sha256()
+    for r in sorted(packed.collect(), key=lambda r: (r.bucket, r.chunk)):
+        h.update(repr((r.bucket, r.chunk, r.first_src, r.last_src, r.n_rows)).encode())
+        h.update(bytes(r.payload))
+    assert h.hexdigest() == GOLDEN_PACKED[graph, config]

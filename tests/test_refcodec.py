@@ -8,6 +8,7 @@ contracts."""
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 import pytest
@@ -22,24 +23,7 @@ from webgraph_ans_rs_spark.operators.refcodec import (
     successors_from_refs,
 )
 
-
-def _weblike_edges(spark, n=1500, seed=3):
-    rng = random.Random(seed)
-    rows = []
-    for x in range(n):
-        base = set(range(x + 1, min(x + 1 + rng.randrange(0, 6), n)))
-        if rng.random() < 0.6 and rows:
-            base.update(rng.sample(rows[-1][1], min(len(rows[-1][1]), 5)))
-        base.update(
-            max(0, min(n - 1, x + rng.randrange(-100, 100)))
-            for _ in range(rng.randrange(0, 4))
-        )
-        base.discard(x)
-        if base:
-            rows.append((x, sorted(base)))
-    return spark.createDataFrame(
-        [(s, d) for s, l in rows for d in l], "src long, dst long"
-    )
+from tests.conftest import hashed_ids, weblike_edges
 
 
 def test_mask_runs_blocks_inverse():
@@ -55,7 +39,7 @@ def test_mask_runs_blocks_inverse():
 
 
 def test_roundtrip_dense_weblike(spark):
-    edges = _weblike_edges(spark)
+    edges = weblike_edges(spark)
     adj = build_csr_adjacency(edges)
     orig = {r.src: r.dsts for r in adj.collect()}
     enc = encode_refs(adj, num_buckets=4).persist()
@@ -69,12 +53,7 @@ def test_roundtrip_dense_weblike(spark):
 def test_roundtrip_hashed_full_range_ids(spark):
     """Arbitrary int64 ids: gaps wrap mod 2^64 (numpy two's-complement),
     still exactly invertible — the same contract as encode_gaps."""
-    edges = _weblike_edges(spark, n=800)
-    hashed = edges.select(
-        F.xxhash64(F.col("src").cast("string")).alias("src"),
-        F.xxhash64(F.col("dst").cast("string")).alias("dst"),
-    )
-    adj = build_csr_adjacency(hashed)
+    adj = build_csr_adjacency(hashed_ids(weblike_edges(spark, n=800)))
     orig = {r.src: r.dsts for r in adj.collect()}
     got = {
         r.src: r.dsts
@@ -85,7 +64,7 @@ def test_roundtrip_hashed_full_range_ids(spark):
 
 def test_roundtrip_through_parquet(spark, tmp_path):
     """Encoded table survives a parquet v2 + zstd write/read cycle."""
-    edges = _weblike_edges(spark, n=600)
+    edges = weblike_edges(spark, n=600)
     adj = build_csr_adjacency(edges)
     orig = {r.src: r.dsts for r in adj.collect()}
     p = str(tmp_path / "refs.parquet")
@@ -106,7 +85,7 @@ def test_ref_chain_depth_bounded(spark):
     """No decode requires following more than max_ref references: replay
     the encoder's chain-depth bookkeeping from the encoded output."""
     max_ref = 3
-    edges = _weblike_edges(spark)
+    edges = weblike_edges(spark)
     enc = encode_refs(build_csr_adjacency(edges), num_buckets=2, max_ref=max_ref)
     rows = sorted(
         ((r.bucket, r.src, r.ref) for r in enc.collect()),
@@ -121,7 +100,7 @@ def test_references_stay_within_window_rows(spark):
     """Each reference resolves within the previous `window` ROWS of its
     bucket — the retention contract decode_refs relies on."""
     window = 7
-    edges = _weblike_edges(spark)
+    edges = weblike_edges(spark)
     enc = encode_refs(build_csr_adjacency(edges), num_buckets=2, window=window)
     by_bucket: dict[int, list] = {}
     for r in sorted(enc.collect(), key=lambda r: (r.bucket, r.src)):
@@ -133,7 +112,7 @@ def test_references_stay_within_window_rows(spark):
 
 
 def test_encode_deterministic(spark):
-    edges = _weblike_edges(spark, n=500)
+    edges = weblike_edges(spark, n=500)
     adj = build_csr_adjacency(edges)
     a = sorted(map(tuple, encode_refs(adj, num_buckets=4).collect()))
     b = sorted(map(tuple, encode_refs(adj, num_buckets=4).collect()))
@@ -144,7 +123,7 @@ def test_point_lookup_on_ref_coded_table(spark):
     """successors_from_refs reads only the [root_src, u] chain slice (one
     pruned job) and matches the full decode — including a u whose list is
     ref-coded (the chain walk actually exercised)."""
-    edges = _weblike_edges(spark, n=600)
+    edges = weblike_edges(spark, n=600)
     adj = build_csr_adjacency(edges)
     orig = {r.src: r.dsts for r in adj.collect()}
     enc = encode_refs(adj, num_buckets=3).persist()
@@ -162,7 +141,7 @@ def test_point_lookup_on_ref_coded_table(spark):
 def test_bucket_count_only_changes_layout_not_values(spark, num_buckets):
     """Decode result is bucket-count-independent (bucket boundaries only
     reset the window — losslessness never depends on them)."""
-    edges = _weblike_edges(spark, n=400)
+    edges = weblike_edges(spark, n=400)
     adj = build_csr_adjacency(edges)
     orig = {r.src: r.dsts for r in adj.collect()}
     got = {
@@ -180,7 +159,7 @@ def test_batch_point_lookup_on_ref_coded_table(spark):
         successors_from_refs_batch,
     )
 
-    edges = _weblike_edges(spark, n=600)
+    edges = weblike_edges(spark, n=600)
     adj = build_csr_adjacency(edges)
     orig = {r.src: list(r.dsts) for r in adj.collect()}
     enc = encode_refs(adj, num_buckets=3).persist()
@@ -193,3 +172,72 @@ def test_batch_point_lookup_on_ref_coded_table(spark):
     }
     assert got == {u: orig[u] for u in probe_ids if u in orig}
     enc.unpersist()
+
+
+# sha256 of repr() of the encoded rows sorted by (bucket, src): the same
+# payload-identity pin as test_bitpack's GOLDEN_PACKED, for the columnar
+# layout.
+GOLDEN_REFS = {
+    "weblike": "d243553b22d84d78d2663bedee3e2a694eb9884dbf1ca8a6ef30586059ba91cf",
+    "hashed": "5684bfc0c2e59956e408c9279440249d7c6f1978c5823233feadc1fb7ffbf2ad",
+}
+
+
+@pytest.mark.parametrize("graph", ["weblike", "hashed"])
+def test_encode_refs_golden_rows(spark, graph):
+    edges = weblike_edges(spark)
+    if graph == "hashed":
+        edges = hashed_ids(edges)
+    enc = encode_refs(build_csr_adjacency(edges), num_buckets=4)
+    rows = sorted(tuple(r) for r in enc.collect())
+    assert hashlib.sha256(repr(rows).encode()).hexdigest() == GOLDEN_REFS[graph]
+
+
+def _overlapping_lists():
+    """40 sorted lists over srcs 0..39. Each list's last id exceeds the
+    next list's first, so a check across list boundaries would fire."""
+    return [(s, [s + 1, s + 2, s + 40]) for s in range(40)]
+
+
+def _encode_with(adj, which):
+    from webgraph_ans_rs_spark.operators.bitpack import encode_refs_bitpacked
+
+    if which == "refs":
+        return encode_refs(adj, num_buckets=2)
+    return encode_refs_bitpacked(adj, num_buckets=2, chunk=8)
+
+
+# two range buckets over srcs 0..39: bucket 0 holds 0..19, bucket 1 holds
+# 20..39, and with chunk=8 the bit packer resets its window at src 28
+@pytest.mark.parametrize("which", ["refs", "bitpacked"])
+@pytest.mark.parametrize(
+    "at", [19, 28], ids=["last_row_of_bucket", "first_row_after_reset"]
+)
+@pytest.mark.parametrize("bad", [[5, 5], [9, 5]], ids=["duplicate", "descending"])
+def test_encoders_reject_unsorted_lists(spark, which, at, bad):
+    from pyspark.errors import PythonException
+
+    rows = _overlapping_lists()
+    rows[at] = (at, bad)
+    adj = spark.createDataFrame(rows, "src long, dsts array<long>")
+    with pytest.raises(
+        PythonException, match=f"ValueError: encode_refs: dsts of src={at} "
+    ):
+        _encode_with(adj, which).collect()
+
+
+@pytest.mark.parametrize("which", ["refs", "bitpacked"])
+def test_encoders_accept_overlapping_neighbour_lists(spark, which):
+    """The sortedness check is per list: a list may start below, at or
+    above where the previous one ended, and may be empty or hold one id."""
+    from webgraph_ans_rs_spark.operators.bitpack import decode_refs_bitpacked
+
+    rows = _overlapping_lists()
+    rows[10] = (10, [49])  # starts at the previous list's last id
+    rows[11] = (11, [])
+    rows[12] = (12, [3])
+    adj = spark.createDataFrame(rows, "src long, dsts array<long>")
+    enc = _encode_with(adj, which)
+    dec = decode_refs(enc) if which == "refs" else decode_refs_bitpacked(enc)
+    got = {r.src: list(r.dsts) for r in dec.collect()}
+    assert got == {s: d for s, d in rows}

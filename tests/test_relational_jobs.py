@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -12,6 +13,8 @@ from webgraph_ans_rs_spark.operators.relational import (
     top_customers_by_spend,
 )
 from webgraph_ans_rs_spark.sources.tables import load_table
+
+from tests.conftest import REPO
 
 SF = "/root/testdata/sf0.001"
 
@@ -44,7 +47,7 @@ def test_build_adjacency_job(tmp_path):
     r = subprocess.run(
         [
             sys.executable,
-            "/root/repo/jobs/build_adjacency.py",
+            os.path.join(REPO, "jobs", "build_adjacency.py"),
             "--synthetic-pages",
             "300",
             "--out",
@@ -71,7 +74,7 @@ def test_analyze_graph_job(tmp_path, spark):
     r = subprocess.run(
         [
             sys.executable,
-            "/root/repo/jobs/analyze_graph.py",
+            os.path.join(REPO, "jobs", "analyze_graph.py"),
             "--edges", edges_dir,
             "--out", out_dir,
             "--only", "kcore,transitivity,degrees,stats,betweenness",

@@ -44,6 +44,10 @@ express sub-byte codes; it runs ONCE at ingest (applyInPandas per
 bucket, buckets independent) and decode is off the query hot path — the
 decoded CSR remains the query layout, this is the ARCHIVE layout, same
 division of labor as the reference (compression tool vs query graph).
+The reference search that feeds the writer (refcodec._encode_rows) is
+batched: one numpy pass per window offset over the whole bucket, not a
+numpy call per list and candidate, so the per-list γ/ζ writes are now
+most of the encode's Python time.
 
 All id arithmetic wraps mod 2^64 (the refcodec contract) so the codec
 is lossless on arbitrary hashed ids.
@@ -55,7 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.bvgraph import BitReader, BitWriter, int2nat, nat2int
-from .refcodec import _apply_blocks, _encode_rows
+from .refcodec import _apply_blocks, _encode_rows, _range_buckets
 
 PACK_SCHEMA = (
     "bucket int, chunk int, first_src long, last_src long, n_rows int,"
@@ -220,19 +224,7 @@ def refs_component_bits(
     is the distributed pass)."""
     from pyspark.sql import functions as SF
 
-    mn, mx = adj.agg(F.min("src"), F.max("src")).first()
-    if mn is None:
-        mn, mx = 0, 0
-    span = max(1, (int(mx) - int(mn)) // num_buckets + 1)
-    off = F.col("src").cast("decimal(38,0)") - F.lit(int(mn)).cast(
-        "decimal(38,0)"
-    )
-    with_bkt = adj.select(
-        F.floor(off / F.lit(span).cast("decimal(38,0)")).cast("int").alias("_bkt"),
-        "src",
-        "dsts",
-    )
-    per_bucket = with_bkt.groupBy("_bkt").applyInPandas(
+    per_bucket = _range_buckets(adj, num_buckets).applyInPandas(
         lambda pdf: _component_bits_pdf(pdf, window, max_ref, zeta_k, chunk),
         COMPONENT_BITS_SCHEMA,
     )
@@ -255,19 +247,7 @@ def encode_refs_bitpacked(
     range-bucketing and reference search as encode_refs; the window
     additionally resets every ``chunk`` lists so chunks decode
     independently."""
-    mn, mx = adj.agg(F.min("src"), F.max("src")).first()
-    if mn is None:
-        mn, mx = 0, 0
-    span = max(1, (int(mx) - int(mn)) // num_buckets + 1)
-    off = F.col("src").cast("decimal(38,0)") - F.lit(int(mn)).cast(
-        "decimal(38,0)"
-    )
-    with_bkt = adj.select(
-        F.floor(off / F.lit(span).cast("decimal(38,0)")).cast("int").alias("_bkt"),
-        "src",
-        "dsts",
-    )
-    return with_bkt.groupBy("_bkt").applyInPandas(
+    return _range_buckets(adj, num_buckets).applyInPandas(
         lambda pdf: _pack_pdf(pdf, window, max_ref, zeta_k, chunk), PACK_SCHEMA
     )
 

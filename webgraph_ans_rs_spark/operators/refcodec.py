@@ -3,15 +3,13 @@
 BVGraph's dominant storage win on real web graphs is reference copying:
 a node's successor list is coded as a diff against a predecessor's list
 within a bounded window — copy-block runs select shared successors, only
-the leftovers are gap-coded residuals (reference semantics:
-/root/reference/src/bvgraph/mod.rs:13-23 ReferenceOffset/BlockCount/
-Blocks; window/ref-chain params /root/reference/src/ans/mod.rs:46-50).
-On cnr-2000, 68% of all arcs are copied arcs
-(/root/reference/tests/data/cnr-2000/cnr-2000.properties: copiedarcs=
-2195145 of arcs=3216152) — the engine's gap codec (graph_build.encode_
-gaps) captured the residual lever and the interval codec was measured
-and rejected (subsumed by parquet v2 delta pages); this module measures
-the copy lever.
+the leftovers are gap-coded residuals (the reference implementation's
+ReferenceOffset/BlockCount/Blocks in src/bvgraph/mod.rs, with window and
+chain-length parameters in src/ans/mod.rs). On cnr-2000, 68% of all arcs
+are copied arcs (copiedarcs=2195145 of arcs=3216152 in its .properties)
+— the engine's gap codec (graph_build.encode_gaps) captured the residual
+lever and the interval codec was measured and rejected (subsumed by
+parquet v2 delta pages); this module measures the copy lever.
 
 Layout above parquet, mirroring rounds 1-3's discipline (no bit fiddling
 below the column layer — parquet v2 page encodings + zstd ARE the
@@ -34,17 +32,25 @@ outdegree is NOT stored — unlike the bit-packed BVGraph stream, the
 column layout knows both array lengths, and copied-count follows from
 the blocks + referenced list length.
 
-Encode/decode are per-BUCKET sequential passes (applyInPandas with
-vectorized numpy inside): window-referenced compression is inherently a
-sequential scan — the same shape as the reference's own encoder, which
-runs node-by-node with a window of previous lists — so Python here is
-the sanctioned "built-ins genuinely can't express it" case, OFF the
-query hot path (an ingest-time storage transform; queries decode once
-into the plain CSR). Buckets are independent ⇒ encode/decode
-parallelize across buckets; the first rows of each bucket simply start
-with an empty window (ref=0), the same boundary BVGraph has at node 0.
-At 100 TB, choose num_buckets so each bucket is ~128-256 MB — same
-sizing rule as the adjacency table's write path.
+Encode and decode run once per BUCKET (applyInPandas over a fixed
+range bucketing of src). Buckets are independent ⇒ they parallelize;
+the first rows of each bucket simply start with an empty window
+(ref=0), the same boundary BVGraph has at node 0. At 100 TB, choose
+num_buckets so each bucket is ~128-256 MB — same sizing rule as the
+adjacency table's write path. This is an ingest-time storage transform,
+OFF the query hot path: queries decode once into the plain CSR.
+
+The encoder's reference search (``_encode_rows``) is batched: it costs a
+fixed number of numpy passes per bucket, whatever the number of lists.
+It flattens the bucket to (row, value) pairs, rank-compresses the values
+and keys every pair as ``row·U + rank``; one ``searchsorted`` per window
+offset k then marks, for every list at once, which of its successors
+the list k rows later also holds. Per-row counts of those marks give the
+whole [rows × window] matrix of candidate costs (copy-block count +
+residual count). Only the choice itself — cheapest candidate whose chain
+is still short enough — is a scalar loop, over small ints, because each
+list's chain depth depends on the choices before it. Decode stays a
+sequential per-list pass: each list needs its decoded reference.
 
 A referenced list must sit within the previous ``window`` ROWS of the
 same bucket and have chain depth < ``max_ref`` (BVGraph maxrefcount;
@@ -101,7 +107,7 @@ def _apply_blocks(ref_list, blocks: list[int]):
 
 
 def _encode_rows(srcs, dsts_seq, window: int, max_ref: int, reset_every=None):
-    """Shared encode loop: for each (src, dsts) in src order, pick the
+    """Encode one bucket: for each (src, dsts) in src order, pick the
     cheapest window reference (or standalone) and yield
 
         (src, off, ref_src, blocks, gaps, cur, root_src)
@@ -112,66 +118,135 @@ def _encode_rows(srcs, dsts_seq, window: int, max_ref: int, reset_every=None):
     residual successors gap-coded mod 2⁶⁴, ``cur`` the full decoded list
     and ``root_src`` the src of the chain BASE (the standalone row a
     point read must start decoding from — the columnar analogue of the
-    reference's .pointers/.states O(1) entry,
-    /root/reference/src/bvgraph/random_access.rs:84-221).
+    reference's .pointers/.states O(1) entry).
     ``reset_every``: forget the window every N rows (bit-packed chunks
-    decode independently)."""
+    decode independently).
+
+    Three steps, none of them a numpy call per (row, candidate):
+
+    1. Cost matrix. The bucket's successors are flattened to (row, value)
+       pairs and the values replaced by their rank among the bucket's
+       distinct values, so ``key = row·U + rank`` is strictly increasing
+       (rows are sorted and duplicate-free) and exact for any int64 id.
+       For each offset k one ``searchsorted`` of ``key + k·U`` marks the
+       successors of row j that row j+k also holds — BVGraph's copy mask
+       of j as the reference of j+k. Per-row counts of the marks give
+       ``common``, and mask transitions inside a row plus a leading-False
+       flag give the copy-block count, so every candidate costs
+       ``1 + blocks + (d − common)`` coded numbers against ``d`` for a
+       standalone list.
+    2. Greedy choice, scalar over small ints: scan the candidates most
+       recent first and take a strictly cheaper one only if its chain
+       depth is below ``max_ref`` (ties go to standalone, then to the
+       smallest offset). Depth depends on earlier choices, so this is the
+       one sequential part; rows with no candidate cheaper than
+       standalone are skipped outright.
+    3. Emission. Blocks are the run lengths of the stored mask slice of
+       the chosen reference; one more ``searchsorted`` flags the copied
+       successors of every row, and the residual gaps of the whole bucket
+       are taken in one pass.
+    """
     import numpy as np
 
-    win: list = []  # (src, list, chain depth, root_src)
-    for i, (src, dsts) in enumerate(zip(srcs, dsts_seq)):
-        if reset_every is not None and i % reset_every == 0:
-            win = []
-        cur = np.asarray(dsts, dtype=np.int64)
-        # enforce the sorted+distinct precondition LOUDLY: the copy search
-        # uses assume_unique set math and the bit packer writes gap-1 (a
-        # zero gap underflows to 2^64-2), so one duplicate edge row from a
-        # caller would silently decode to a DIFFERENT graph. Direct
-        # element comparison — np.diff could wrap on full-range int64s.
-        if len(cur) > 1 and bool((cur[1:] <= cur[:-1]).any()):
-            raise ValueError(
-                f"encode_refs: dsts of src={src} are not strictly "
-                "increasing (sorted, duplicate-free) — feed distinct "
-                "(src, dst) edges or array_distinct the lists first"
-            )
-        d = len(cur)
-        best_cost = d  # standalone cost: d residual gaps
-        best = None  # (off, ref_src, ref_list, mask, blocks, depth, root)
-        for k, (rs, rl, dep, rroot) in enumerate(reversed(win)):
-            if dep >= max_ref or len(rl) == 0:
-                continue
-            mask = np.isin(rl, cur, assume_unique=True)
-            common = int(mask.sum())
-            if common == 0:
-                continue
-            blocks = _mask_runs(mask)
-            cost = 1 + len(blocks) + (d - common)
-            # strict < : prefer standalone on ties (cheaper decode);
-            # candidates scan most-recent-first, so equal-cost refs tie-
-            # break to the SMALLEST delta deterministically
-            if cost < best_cost:
-                best_cost = cost
-                best = (k + 1, rs, rl, mask, blocks, dep, rroot)
-        if best is None:
-            off, ref_src, depth, blocks, res, root = 0, src, 0, [], cur, src
+    srcs = list(srcs)
+    n = len(srcs)
+    if n == 0:
+        return
+    lists = [np.asarray(d, dtype=np.int64) for d in dsts_seq]
+    lens = np.fromiter(map(len, lists), dtype=np.int64, count=n)
+    starts = np.concatenate([[0], np.cumsum(lens)])
+    vals = np.concatenate(lists)
+    rowid = np.repeat(np.arange(n), lens)
+    same_row = rowid[1:] == rowid[:-1]
+    # enforce the sorted+distinct precondition LOUDLY: the rank keys below
+    # must be strictly increasing and the bit packer writes gap-1 (a zero
+    # gap underflows to 2^64-2), so one duplicate edge row from a caller
+    # would silently decode to a DIFFERENT graph. Direct element
+    # comparison (np.diff could wrap on full-range int64s), and only
+    # between neighbours of the same row.
+    bad = np.flatnonzero((vals[1:] <= vals[:-1]) & same_row)
+    if len(bad):
+        raise ValueError(
+            f"encode_refs: dsts of src={srcs[rowid[bad[0]]]} are not strictly "
+            "increasing (sorted, duplicate-free) — feed distinct "
+            "(src, dst) edges or array_distinct the lists first"
+        )
+    n_vals = len(vals)
+    kmax = min(window, n - 1) if n_vals else 0
+    if reset_every is not None:
+        kmax = min(kmax, reset_every - 1)
+    segment = np.arange(n) // reset_every if reset_every else np.zeros(n, int)
+
+    # 1. cost[i, k-1] of coding row i against row i-k; int64 max where
+    # row i-k is not in row i's window
+    uniq, rank = np.unique(vals, return_inverse=True)
+    n_ranks = len(uniq)
+    key = rowid * n_ranks + rank
+    nonempty = np.flatnonzero(lens)
+    no_candidate = np.iinfo(np.int64).max
+    cost = np.full((n, window), no_candidate, dtype=np.int64)
+    masks = [None]  # masks[k][e]: successor e of row j is in row j+k
+    for k in range(1, kmax + 1):
+        q = key + k * n_ranks
+        m = key[np.minimum(np.searchsorted(key, q), n_vals - 1)] == q
+        masks.append(m)
+        common = np.bincount(rowid[m], minlength=n)
+        n_blocks = np.bincount(rowid[1:][(m[1:] != m[:-1]) & same_row], minlength=n)
+        n_blocks[nonempty] += ~m[starts[nonempty]]
+        cost[k:, k - 1] = np.where(
+            segment[k:] == segment[:-k],
+            1 + n_blocks[:-k] + lens[k:] - common[:-k],
+            no_candidate,
+        )
+
+    # 2. depth-constrained greedy over the rows that have a candidate
+    # cheaper than standalone. An empty or disjoint candidate costs at
+    # least d + 1, so it never wins and needs no explicit skip.
+    off = [0] * n
+    depth = [0] * n
+    root = list(srcs)
+    d = lens.tolist()
+    cand = np.flatnonzero((cost < lens[:, None]).any(axis=1))
+    for i, row in zip(cand.tolist(), cost[cand].tolist()):
+        best_cost, best = d[i], 0
+        for k, c in enumerate(row, 1):
+            if c < best_cost and depth[i - k] < max_ref:
+                best_cost, best = c, k
+        if best:
+            off[i] = best
+            depth[i] = depth[i - best] + 1
+            root[i] = root[i - best]
+
+    # 3. residuals: the successors of row i absent from row i - off[i]
+    # (copied values keep the referenced list's sorted order)
+    elem_off = np.asarray(off, dtype=np.int64)[rowid]
+    q = key - elem_off * n_ranks
+    copied = (elem_off > 0) & (key[np.searchsorted(key, q)] == q)
+    res = vals[~copied]
+    res_row = rowid[~copied]
+    res_starts = np.concatenate([[0], np.cumsum(np.bincount(res_row, minlength=n))])
+    heads = res_starts[:-1][res_starts[:-1] < res_starts[1:]]
+    gaps = np.empty_like(res)
+    # int64 wraparound is the CONTRACT (mod-2^64 gaps, invertible by
+    # wrapping cumsum) — silence numpy's overflow warning
+    with np.errstate(over="ignore"):
+        gaps[1:] = res[1:] - res[:-1]
+        gaps[heads] = res[heads] - np.asarray(srcs, dtype=np.int64)[res_row[heads]]
+
+    starts = starts.tolist()
+    res_starts = res_starts.tolist()
+    for i, src in enumerate(srcs):
+        k = off[i]
+        if k:
+            j = i - k
+            ref_src = srcs[j]
+            blocks = _mask_runs(masks[k][starts[j] : starts[j + 1]])
         else:
-            off, rs, rl, mask, blocks, dep, rroot = best
-            ref_src = rs
-            depth = dep + 1
-            root = rroot
-            # copied values keep the referenced list's (sorted) order
-            res = np.setdiff1d(cur, rl[mask], assume_unique=True)
-        gaps = np.empty(len(res), dtype=np.int64)
-        if len(res):
-            # int64 wraparound is the CONTRACT (mod-2^64 gaps, invertible
-            # by wrapping cumsum) — silence numpy's overflow warning
-            with np.errstate(over="ignore"):
-                gaps[0] = res[0] - src
-                gaps[1:] = np.diff(res)
-        yield src, off, ref_src, blocks, gaps, cur, root
-        win.append((src, cur, depth, root))
-        if len(win) > window:
-            win.pop(0)
+            ref_src, blocks = src, []
+        yield (
+            src, k, ref_src, blocks, gaps[res_starts[i] : res_starts[i + 1]],
+            lists[i], root[i],
+        )
 
 
 def _encode_pdf(pdf, window: int, max_ref: int):
@@ -248,6 +323,27 @@ def _decode_pdf(pdf, window: int):
     return pd.DataFrame({"src": o_src, "dsts": o_dsts})
 
 
+def _range_buckets(adj: DataFrame, num_buckets: int):
+    """(src, dsts) grouped by ``_bkt``: ``num_buckets`` equal-width src
+    ranges over [min(src), max(src)] — the fixed bucketing every encoder
+    shares, so the same graph always splits into the same buckets."""
+    mn, mx = adj.agg(F.min("src"), F.max("src")).first()
+    if mn is None:
+        mn, mx = 0, 0
+    span = max(1, (int(mx) - int(mn)) // num_buckets + 1)
+    # decimal(38,0) offset arithmetic: full-range hashed ids overflow ANSI
+    # long subtraction (span-division of the unsigned offset is exact in
+    # decimal — the same wrap-safety contract as graph_build._wrap_sub64)
+    off = F.col("src").cast("decimal(38,0)") - F.lit(int(mn)).cast(
+        "decimal(38,0)"
+    )
+    return adj.select(
+        F.floor(off / F.lit(span).cast("decimal(38,0)")).cast("int").alias("_bkt"),
+        "src",
+        "dsts",
+    ).groupBy("_bkt")
+
+
 def encode_refs(
     adj: DataFrame,
     num_buckets: int = 8,
@@ -266,22 +362,7 @@ def encode_refs(
     ValueError on the first non-strictly-increasing list, so a violation
     fails the encode job loudly instead of decoding to a different
     graph."""
-    mn, mx = adj.agg(F.min("src"), F.max("src")).first()
-    if mn is None:
-        mn, mx = 0, 0
-    span = max(1, (int(mx) - int(mn)) // num_buckets + 1)
-    # decimal(38,0) offset arithmetic: full-range hashed ids overflow ANSI
-    # long subtraction (span-division of the unsigned offset is exact in
-    # decimal — the same wrap-safety contract as graph_build._wrap_sub64)
-    off = F.col("src").cast("decimal(38,0)") - F.lit(int(mn)).cast(
-        "decimal(38,0)"
-    )
-    with_bkt = adj.select(
-        F.floor(off / F.lit(span).cast("decimal(38,0)")).cast("int").alias("_bkt"),
-        "src",
-        "dsts",
-    )
-    return with_bkt.groupBy("_bkt").applyInPandas(
+    return _range_buckets(adj, num_buckets).applyInPandas(
         lambda pdf: _encode_pdf(pdf, window, max_ref), ENC_SCHEMA
     )
 
