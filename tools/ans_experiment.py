@@ -30,12 +30,11 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
-
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DIRECT = int(os.environ.get("ANS_DIRECT", "256"))  # model symbols below; escape per bit length above
 _B0 = DIRECT.bit_length()  # escape buckets start at this bit length

@@ -95,7 +95,10 @@ from webgraph_ans_rs_spark.operators.pagerank import (  # noqa: E402
 
 aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
 spark.conf.set("spark.sql.adaptive.enabled", "false")
-dump("pagerank_superstep", superstep_probe(edges, verts))
+caches = []
+dump("pagerank_superstep", superstep_probe(edges, verts, release_caches=caches))
+for c in caches:
+    c.unpersist(blocking=False)
 spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 dump("pagerank_result", pagerank(edges, verts, max_iter=5, tol=None).ranks)
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from webgraph_ans_rs_spark.sources.bvgraph import (  # noqa: E402
     CNR_BASENAME,

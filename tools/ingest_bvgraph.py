@@ -11,9 +11,10 @@ arcs=3216152 for cnr-2000) before anything is written; a sidecar
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from webgraph_ans_rs_spark.sources.bvgraph import (  # noqa: E402
     CNR_BASENAME,

@@ -5,9 +5,10 @@ codegen). Prints a PASS/FAIL line per property; run after operator changes.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -144,7 +145,8 @@ def main() -> int:
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        step2 = superstep_probe(edges, vertices(docs))
+        pr_caches: list = []
+        step2 = superstep_probe(edges, vertices(docs), release_caches=pr_caches)
         jplan = step2._jdf.queryExecution().executedPlan()
         n_exchange = count_nodes(jplan, "Exchange")
         n_sort = count_nodes(jplan, "Sort")
@@ -154,6 +156,8 @@ def main() -> int:
             n_exchange == 1 and n_sort == 0 and n_shj == 1,
             f"(exchanges={n_exchange} sorts={n_sort} shj={n_shj})",
         )
+        for c in pr_caches:  # plan inspected — release the probe caches
+            c.unpersist(blocking=False)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 

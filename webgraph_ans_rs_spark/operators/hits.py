@@ -1,90 +1,69 @@
-"""HITS (Kleinberg hubs & authorities) — single-exchange CSR half-steps.
+"""HITS (Kleinberg hubs & authorities) on the PageRank superstep kernel.
 
-The reference engine's kernel surface is PageRank-shaped gather/scatter
-over the compressed adjacency (the BVGraph layout serves any left- or
-right-multiplication by the adjacency matrix); HITS is the canonical
-second spectral kernel a web-graph user runs on the same edge table, and
-it inherits the flagship loop's discipline (operators/pagerank.py):
+HITS is the second spectral kernel a web-graph user runs on the same edge
+table. Each half-step is the scatter–gather superstep of
+operators/superstep.py (one exchange under its co-partitioning contract)
+with contribution ``sc``, the previous half-step's raw score:
 
-  auth half-step:  csr_fwd ⋈ hub on src (exchange- and sort-free: both
-                   sides share HashPartitioning(·, P); shuffle_hash hint
-                   builds the V-sized score map) → narrow explode of the
-                   successor arrays → ∪ zero rows → groupBy(vertex).sum
-                   — exactly ONE exchange, the E-sized gather
-                   (tools/plan_audit.py check 20).
-  hub half-step:   the same shape over the TRANSPOSED CSR (in-neighbor
-                   lists), gathering the fresh authority scores.
-  normalize:       DEFERRED. Gathers are linear and sum-normalization is
-                   a uniform scaling, so scaling commutes through the
-                   whole loop: the half-steps run UNNORMALIZED and the
-                   two totals are read once at the end (two driver-scalar
-                   aggs) — per-half-step normalization would force a
-                   materialization barrier + action per half-step, which
-                   measured 2-3× the whole loop's cost at 8.6M edges.
-                   Identical vector in exact arithmetic; the float
-                   difference vs the oracle's per-half-step division is
-                   ~1e-16 relative (uniform scaling preserves relative
-                   precision), far below the gate's 6dp rounding — the
-                   same argument as pagerank's max_segment note. Raw
-                   magnitudes grow like (mean degree)^half-steps: ~1e10
-                   for 3 iterations at web degrees, nowhere near double
-                   range. Sum instead of the textbook L2: identical fixed
-                   point up to scaling and the unrolled DuckDB oracle
-                   replays it with plain SUM — no sqrt ulps.
+  auth half-step:  gather the hub scores along the forward CSR;
+  hub half-step:   gather the fresh authority scores along the TRANSPOSED
+                   CSR (in-neighbor lists).
 
-Loop-invariant state (both CSRs, zero rows) is cached once; lineage is
-truncated every ``truncate_every`` half-steps (localCheckpoint bounds
-plan depth without a per-half-step barrier). ``max_segment`` splits hub
-adjacency lists in BOTH directions (graph_build.build_csr_segments — the
-transpose is where real web graphs put their 1e7-degree hubs); segments
-gather independently and the partial sums fold in the same shuffle.
+Normalization is DEFERRED. Gathers are linear and sum-normalization is a
+uniform scaling, so scaling commutes through the whole loop: the
+half-steps run UNNORMALIZED and the two totals are read once at the end
+(two driver-scalar aggs) — per-half-step normalization would force a
+materialization barrier + action per half-step, which measured 2-3× the
+whole loop's cost at 8.6M edges. Identical vector in exact arithmetic;
+the float difference vs the oracle's per-half-step division is ~1e-16
+relative, far below the gate's 6dp rounding. Sum instead of the textbook
+L2: identical fixed point up to scaling, and the unrolled DuckDB oracle
+replays it with plain SUM — no sqrt ulps.
+
+Lineage is truncated every TRUNCATE_EVERY half-steps; when raw magnitudes
+could approach double range, that barrier also rescales (see ``hits``).
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import superstep
 
-def _csr(edges: DataFrame, p: int, max_segment: int | None) -> DataFrame:
-    from .pagerank import _pin_src_partitions
-
-    if max_segment is not None:
-        from .graph_build import build_csr_segments
-
-        base = build_csr_segments(edges, max_segment)
-    else:
-        base = edges.groupBy("src").agg(F.collect_list("dst").alias("dsts"))
-    # groupBy("src") already emits HashPartitioning(src, P) — only re-
-    # exchange when the requested p differs or the build was segmented
-    # (grouped by (src, _seg)); see pagerank._pin_src_partitions
-    return _pin_src_partitions(
-        base.select("src", "dsts"), p, edges.sparkSession,
-        force=max_segment is not None,
-    ).persist()
+TRUNCATE_EVERY = 4  # localCheckpoint cadence, in half-steps (even)
 
 
-def _gather(csr: DataFrame, score: DataFrame, zeros: DataFrame) -> DataFrame:
-    """One half-step gather: scatter ``score.sc`` along the adjacency
-    arrays, fold the zero seed rows into the same shuffle (IEEE x+0.0
-    == x), partial-sum map-side — exactly one exchange."""
-    return (
-        csr.join(score.hint("shuffle_hash"), csr["src"] == score["vertex"])
-        .select(F.explode("dsts").alias("vertex"), F.col("sc").alias("c"))
-        .unionAll(zeros)
-        .groupBy("vertex")
-        .agg(F.sum("c").alias("raw"))
+def _setup(cache, edges: DataFrame, verts: DataFrame):
+    """Loop invariants: (auth half-step, hub half-step, initial hub scores,
+    vertex count)."""
+    p = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = edges.select("src", "dst")
+    fwd, _ = superstep.build_csr(cache, e, p)
+    rev, _ = superstep.build_csr(
+        cache, e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), p
+    )
+    # the zero rows keep the vertex frame's own (few) partitions: derived
+    # from the P-partitioned score state they would add P gather map tasks
+    zeros = cache(verts.select("vertex", F.lit(0.0).alias("c")))
+    n = zeros.count()
+    score = (
+        verts.select("vertex", F.lit(1.0).alias("sc"))
+        .repartition(p, "vertex")
+        .localCheckpoint(eager=True)
     )
 
+    def half(csr: DataFrame):
+        return lambda sc: superstep.gather(csr, sc, zeros, F.col("sc")).select(
+            "vertex", F.col("gathered").alias("sc")
+        )
 
-def hits(
-    edges: DataFrame,
-    verts: DataFrame,
-    num_iter: int = 3,
-    shuffle_partitions: int | None = None,
-    max_segment: int | None = None,
-    truncate_every: int = 4,
-) -> DataFrame:
+    return half(fwd), half(rev), score, n
+
+
+def hits(edges: DataFrame, verts: DataFrame, num_iter: int = 3) -> DataFrame:
     """(vertex, auth, hub) after ``num_iter`` sum-normalized iterations.
 
     auth_i(v) = Σ_{u→v} hub_{i-1}(u) / Σ_raw;  hub_i(u) = Σ_{u→v} auth_i(v)
@@ -92,59 +71,22 @@ def hits(
     including the edgeless-graph corner, where the normalization total of
     an all-zero frame is clamped to 1 so scores stay 0.0, never NaN.
 
-    Overflow guard: unnormalized magnitudes grow like (mean degree)^half-
-    steps, which overflows double for large ``num_iter`` on high-degree
-    graphs, so every ``truncate_every`` half-steps the checkpointed frame
-    is additionally RESCALED by its running max (uniform scaling commutes
-    through the linear gathers and cancels in the final division — the
-    scores are unchanged; the checkpoint is an action anyway, so the max
-    is one cheap driver agg on an already-materialized frame). Growth is
-    thus bounded by (max degree)^truncate_every between rescales.
+    Overflow guard: a half-step grows the max magnitude by at most a
+    factor n (degree ≤ n, scores start at 1), so max |score| after h
+    half-steps ≤ n^(h+1). Only when (2·num_iter + 1)·log10(n) exceeds 250
+    (DBL_MAX is 1e308) is each truncation barrier also RESCALED by its
+    running max — uniform scaling commutes through the linear gathers and
+    cancels in the final division, so scores are unchanged, and the
+    checkpoint is an action anyway, so the max is one cheap driver agg.
     """
     if num_iter < 1:
         raise ValueError(f"hits: num_iter must be >= 1, got {num_iter}")
-    spark = edges.sparkSession
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-    csr_fwd = csr_rev = zeros = None
-    try:
-        # AQE partition coalescing off inside the loop: the gather must
-        # emit HashPartitioning(vertex, P) for the next half-step's join
-        # to be exchange-free (the pagerank co-partitioning contract)
-        spark.conf.set(coalesce_key, "false")
-        e = edges.select("src", "dst")
-        csr_fwd = _csr(e, p, max_segment)
-        csr_fwd.count()
-        csr_rev = _csr(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            p,
-            max_segment,
-        )
-        csr_rev.count()
-        zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
-        n = zeros.count()
-        score = (
-            verts.select("vertex", F.lit(1.0).alias("sc"))
-            .repartition(p, "vertex")
-            .localCheckpoint(eager=True)
-        )
-        # Conditional overflow guard (round-7): a half-step can grow the
-        # max magnitude by at most a factor n (degree ≤ n, scores start at
-        # 1), so max |score| after h half-steps ≤ n^(h+1). When
-        # (2·num_iter + 1)·log10(n) stays far inside double range the
-        # rescale agg + division are pure overhead and are SKIPPED —
-        # zero extra jobs, identical fixed point (uniform scaling cancels
-        # in the final normalization either way). DBL_MAX is 1e308; 250
-        # leaves two orders of magnitude of slack per half-step.
-        import math
-
+    with superstep.kernel_scope(edges.sparkSession) as cache:
+        auth_step, hub_step, score, n = _setup(cache, edges, verts)
         need_rescale = (2 * num_iter + 1) * math.log10(max(n, 2)) > 250.0
 
-        def _rescale(frame):
-            # running-max rescale at the (already materialized) barrier:
-            # keeps raw magnitudes ~O(1) so long loops never overflow;
-            # scaling commutes with the gathers and cancels at the end
+        def barrier(frame):
+            frame = frame.localCheckpoint(eager=True)
             if not need_rescale:
                 return frame
             m = frame.agg(F.max(F.abs("sc"))).first()[0]
@@ -152,29 +94,16 @@ def hits(
                 return frame
             return frame.select("vertex", (F.col("sc") / F.lit(m)).alias("sc"))
 
-        auth_raw = None
-        half = 0
-        for i in range(num_iter):
-            last = i == num_iter - 1
-            auth_raw = _gather(csr_fwd, score, zeros).select(
-                "vertex", F.col("raw").alias("sc")
-            )
-            half += 1
-            if last:
+        for i in range(1, num_iter + 1):
+            auth_raw = auth_step(score)
+            if i == num_iter:
                 # materialize the FINAL auth frame before the last hub
                 # gather consumes it: it is read three times (the gather,
-                # its total, the final join) — checkpointing it after the
-                # hub gather re-executed the whole half-step (one full
-                # E-sized gather wasted, measured ~0.8 s at 8.6M edges)
+                # its total, the final join)
                 auth_raw = auth_raw.localCheckpoint(eager=True)
-            elif half % truncate_every == 0:
-                auth_raw = _rescale(auth_raw.localCheckpoint(eager=True))
-            score = _gather(csr_rev, auth_raw, zeros).select(
-                "vertex", F.col("raw").alias("sc")
-            )
-            half += 1
-            if half % truncate_every == 0 and not last:
-                score = _rescale(score.localCheckpoint(eager=True))
+            score = hub_step(auth_raw)
+            if (2 * i) % TRUNCATE_EVERY == 0 and i < num_iter:
+                score = barrier(score)
         hub_raw = score.localCheckpoint(eager=True)
         atot = auth_raw.agg(F.sum("sc")).first()[0] or 1.0  # 0/None → 1
         htot = hub_raw.agg(F.sum("sc")).first()[0] or 1.0
@@ -186,47 +115,15 @@ def hits(
             )
             .select("vertex", "auth", "hub")
         )
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        for c in (csr_fwd, csr_rev, zeros):
-            if c is not None:
-                c.unpersist(blocking=False)
 
 
 def hits_halfstep_probe(
-    edges: DataFrame,
-    verts: DataFrame,
-    shuffle_partitions: int | None = None,
-    release_caches: list | None = None,
+    edges: DataFrame, verts: DataFrame, release_caches: list | None = None
 ) -> DataFrame:
-    """Un-executed second half-step frame on the production shapes (first
-    half-step executed + checkpointed exactly as the loop does) — for
-    tools/plan_audit.py check 20: a HITS half-step must plan exactly ONE
-    exchange, like the PageRank superstep. Pass ``release_caches=[]`` to
-    unpersist the probe's cached frames AFTER plan inspection (the
-    unpersist-before-explain trap, pagerank.ppr_superstep_probe)."""
-    spark = edges.sparkSession
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst")
-    csr_fwd = _csr(e, p, None)
-    csr_fwd.count()
-    csr_rev = _csr(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")), p, None
-    )
-    csr_rev.count()
-    zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
-    zeros.count()
-    score = (
-        verts.select("vertex", F.lit(1.0).alias("sc"))
-        .repartition(p, "vertex")
-        .localCheckpoint(eager=True)
-    )
-    araw = _gather(csr_fwd, score, zeros).localCheckpoint(eager=True)
-    auth = araw.select("vertex", (F.col("raw") / F.lit(2.0)).alias("sc"))
-    probe = _gather(csr_rev, auth, zeros)
-    if release_caches is not None:
-        release_caches.extend([csr_fwd, csr_rev, zeros])
-    else:
-        for c in (csr_fwd, csr_rev, zeros):
-            c.unpersist(blocking=False)
-    return probe
+    """The un-executed hub half-step of ``hits`` for plan audits: the
+    production setup and the first auth half-step run and are
+    checkpointed, so the frame is the production plan. ``release_caches``
+    as in pagerank.superstep_probe."""
+    with superstep.kernel_scope(edges.sparkSession, release_caches) as cache:
+        auth_step, hub_step, score, _ = _setup(cache, edges, verts)
+        return hub_step(auth_step(score).localCheckpoint(eager=True))

@@ -1,46 +1,34 @@
-"""Power-iteration PageRank as a Pregel-style gather-scatter loop.
+"""Power-iteration PageRank: one superstep kernel, four thin wrappers.
 
-Per superstep (all DataFrame ops, JVM-side), ONE shuffle aggregation:
+``pagerank``, ``pagerank_weighted``, ``personalized_pagerank`` and
+``personalized_pagerank_converged`` all run ``_setup`` + ``_iterate``:
+the scatter–gather superstep of operators/superstep.py (one exchange per
+superstep under its co-partitioning contract) followed by a projection.
+Three things vary per variant:
 
-  scatter:  csr ⋈ ranks on src — the join is V-sized (one row per source
-            vertex with its successor array + weight w = 1/outdeg,
-            precomputed once); the E-sized fan-out is a narrow explode
-            AFTER the join. Measured on local[4]→local[16]: the per-edge
-            join scales at 0.45 efficiency, the CSR join at 0.68, and the
-            CSR join moves 4× less data through the exchange.
-  gather:   explode output ∪ one zero-contribution row per vertex →
-            groupBy(vertex).sum. The zero rows fold the "apply" outer
-            join into the same shuffle (IEEE x+0.0 == x keeps values
-            bit-identical). Catalyst plans a map-side partial sum, so hub
-            vertices receive pre-combined partials from each upstream
-            partition (two-stage "salted" aggregation done by the
-            engine); AQE skew handling re-splits pathological shuffle
-            partitions at runtime.
-  apply:    rank' = (1-d)/n + d·(gathered + dangling_mass/n) — a
-            projection on the gather output, no extra shuffle.
+  contribution: pr·w (w = 1/outdeg) for the plain CSR, pr·e.wn for the
+                weighted one (wn = wt/Σwt, normalized once at build);
+  apply:        uniform teleport — rank' = (1-d)/n + d·(gathered +
+                dangling_mass/n), a projection on the gather output — or
+                personalized — rank' = ((1-d) + d·dangling_mass)·s(v) +
+                d·gathered, an exchange-free shuffle-hash join against the
+                co-partitioned teleport vector ``sv``;
+  stopping:     ``tol=None`` runs exactly ``max_iter`` supersteps (the
+                oracle-comparable fixed mode); otherwise the L1 delta of
+                consecutive iterations is computed and the loop stops at
+                ``≤ tol``. ``checkpoint_manager`` commits every superstep.
 
-Loop-invariant state (CSR, zero rows, dangling vertex set) is computed and
-cached once; ``setup_sec`` vs ``loop_sec`` are reported separately because
-superstep throughput is the headline metric (the reference's ns/arc
-numbers likewise exclude compression time, README.md:106-150).
+Dangling vertices redistribute their mass along the teleport vector, so
+sum(rank) == 1 holds every iteration. Loop invariants (CSR, dangling set,
+teleport vector) are cached once; ``setup_sec`` vs ``loop_sec`` are
+reported separately because superstep throughput is the headline metric.
 
-Dangling vertices redistribute their mass uniformly; sum(rank) == 1 holds
-every iteration.
-
-Lineage is truncated each superstep with localCheckpoint (or parquet
-commits via CheckpointManager for resumable runs) — the analogue of the
-reference's per-node ANSCompressorPhase resume points
-(/root/reference/src/ans/mod.rs:62-68, bvgraph_encoder.rs:167-171).
-
-Scale notes (100 TB / 1e12 docs): exactly ONE shuffle per superstep — the
-E-sized gather on dst. The scatter join is exchange- and sort-free: csr and
-ranks share one partition count P, AQE partition coalescing is suspended
-inside the loop so the gather emits HashPartitioning(vertex, P) that
-localCheckpoint preserves into the next superstep, and a shuffle_hash hint
-builds the V-sized rank map instead of sorting both sides
-(tools/plan_audit.py check 9 asserts the single-exchange property).
-Rank state is O(V); edges are loop-invariant and cached once, amortized
-across supersteps.
+Lineage is truncated with localCheckpoint every TRUNCATE_EVERY supersteps
+(a barrier right before the final superstep is skipped), and every
+superstep in the personalized loop or when the L1 delta or a checkpoint
+commit reads the frame. The parquet commits of
+CheckpointManager are the resumable analogue of the reference's per-phase
+resume points.
 """
 
 from __future__ import annotations
@@ -50,6 +38,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import superstep
+
+TRUNCATE_EVERY = 3  # fixed-mode localCheckpoint cadence, in supersteps
+
 
 @dataclass
 class PageRankResult:
@@ -61,214 +54,101 @@ class PageRankResult:
     loop_sec: float = 0.0  # superstep loop wall time (the throughput metric)
 
 
-def _pin_src_partitions(csr, p: int, spark, force: bool = False) -> DataFrame:
-    """Pin the CSR to HashPartitioning(src, p) WITHOUT a redundant
-    exchange: ``groupBy("src")`` already emits exactly that partitioning
-    when p equals the session shuffle-partition count (AQE coalescing is
-    off inside the loops), and the explicit ``repartition(p, "src")`` the
-    loops used to add re-exchanged the whole E-sized adjacency a second
-    time per call (round-7; probe-verified that the superstep still plans
-    exactly 1 exchange / 0 sorts without it, and row placement — hence
-    every float partial-sum order — is identical because both paths are
-    the same HashPartitioning). ``force`` covers builds whose grouping
-    keys differ from plain src (the segmented CSR groups by (src, _seg),
-    which does NOT satisfy the scatter join's distribution)."""
-    if force or p != int(spark.conf.get("spark.sql.shuffle.partitions")):
-        return csr.repartition(p, "src")
-    return csr
-
-
-def _superstep_frame(csr, ranks, zeros, base: float, damping: float) -> DataFrame:
-    """One superstep: scatter (exchange-free shuffle-hash join + narrow
-    explode), gather (the ONE per-superstep shuffle), apply (projection)."""
-    scattered = csr.join(
-        ranks.hint("shuffle_hash"), csr["src"] == ranks["vertex"]
-    ).select(F.explode("dsts").alias("vertex"), (F.col("pr") * F.col("w")).alias("c"))
-    return (
-        scattered.unionAll(zeros)
-        .groupBy("vertex")
-        .agg(F.sum("c").alias("gathered"))
-        .select(
-            "vertex",
-            (F.lit(base) + F.lit(damping) * F.col("gathered")).alias("pr"),
-        )
-    )
-
-
-def superstep_probe(
-    edges: DataFrame,
-    verts: DataFrame,
-    damping: float = 0.85,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Build the exact superstep-2 DataFrame (un-executed) on the production
-    code path, for physical-plan audits: superstep 1 is executed and
-    checkpointed exactly as the loop does, so the returned frame's rank
-    side is a LogicalRDD with the loop's preserved partitioning."""
-    spark = edges.sparkSession
-    n = verts.count()
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    csr = (
-        edges.groupBy("src")
-        .agg(F.collect_list("dst").alias("dsts"), F.count("*").alias("od"))
-        .select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
-    csr.count()
-    zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
-    zeros.count()
-    ranks = (
-        verts.select("vertex", F.lit(1.0 / n).alias("pr"))
-        .repartition(p, "vertex")
-        .localCheckpoint(eager=True)
-    )
-    base = (1.0 - damping) / n
-    ranks = _superstep_frame(csr, ranks, zeros, base, damping).localCheckpoint(eager=True)
-    return _superstep_frame(csr, ranks, zeros, base, damping)
-
-
-def ppr_superstep_probe(
-    edges: DataFrame,
-    verts: DataFrame,
-    seeds: DataFrame,
-    damping: float = 0.85,
-    shuffle_partitions: int | None = None,
-    release_caches: list | None = None,
-) -> DataFrame:
-    """Un-executed superstep-2 frame of the personalized loop, built on the
-    production shapes (superstep 1 executed + checkpointed exactly as the
-    loop does) — for tools/plan_audit.py check 17: the PPR superstep must
-    plan exactly ONE exchange (the gather), like the uniform loop.
-
-    Pass ``release_caches=[]`` to receive the cached frames the probe's
-    plan depends on and unpersist them AFTER inspecting the plan; without
-    it the probe unpersists them immediately (fine for executing, but the
-    inspected plan then re-expands the cached lineage)."""
-    spark = edges.sparkSession
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_seeds = seeds.count()
-    s_val = 1.0 / n_seeds
-    sv = (
-        verts.join(
-            seeds.select("vertex").withColumn("_is_seed", F.lit(True)), "vertex", "left"
-        )
-        .select(
-            "vertex",
-            F.when(F.col("_is_seed"), F.lit(s_val)).otherwise(F.lit(0.0)).alias("s"),
-        )
-        .repartition(p, "vertex")
-        .persist()
-    )
-    sv.count()
-    csr = (
-        edges.groupBy("src")
-        .agg(F.collect_list("dst").alias("dsts"), F.count("*").alias("od"))
-        .select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w"))
-        .repartition(p, "src")
-        .persist()
-    )
-    csr.count()
-    zeros = verts.select("vertex", F.lit(0.0).alias("c")).persist()
-    zeros.count()
-    pr = (
-        sv.select("vertex", F.col("s").alias("pr"))
-        .repartition(p, "vertex")
-        .localCheckpoint(eager=True)
-    )
-    coef = 1.0 - damping
-    pr = _ppr_superstep_frame(csr, pr, zeros, sv, coef, damping).localCheckpoint(
-        eager=True
-    )
-    probe = _ppr_superstep_frame(csr, pr, zeros, sv, coef, damping)
-    if release_caches is not None:
-        # cache substitution happens at PLANNING time, so the frames must
-        # stay persisted until the caller has inspected the probe's plan;
-        # the caller then unpersists these (otherwise they leak for the
-        # session — measured by the round-4 advice pass)
-        release_caches.extend([sv, csr, zeros])
+def _setup(cache, edges, verts, n, p, ranks, damping, sv=None, max_segment=None,
+           weighted=False):
+    """Loop invariants of one variant, built inside a kernel_scope: returns
+    (checkpointed initial ranks, ``step(ranks)`` → the next superstep's
+    un-executed frame, whether every superstep must be checkpointed).
+    ``sv`` (vertex, s) selects the personalized apply."""
+    csr, n_sources = superstep.build_csr(cache, edges, p, max_segment, weighted)
+    mass = superstep.dangling_mass(cache, csr, n_sources, verts, n)
+    ranks = ranks.localCheckpoint(eager=True)
+    # zero-contribution row per vertex: a narrow projection of the
+    # checkpointed initial state, no separate V-sized persist
+    zeros = ranks.select("vertex", F.lit(0.0).alias("c"))
+    if weighted:
+        contribution, dst = F.col("pr") * F.col("e.wn"), "e.dst"
     else:
-        for c in (sv, csr, zeros):
-            c.unpersist(blocking=False)
-    return probe
+        contribution, dst = F.col("pr") * F.col("w"), "e"
+
+    def step(ranks):
+        dm = mass(ranks)
+        gathered = superstep.gather(csr, ranks, zeros, contribution, dst)
+        if sv is None:
+            base = (1.0 - damping) / n + damping * dm / n
+            return gathered.select(
+                "vertex", (F.lit(base) + F.lit(damping) * F.col("gathered")).alias("pr")
+            )
+        coef = (1.0 - damping) + damping * dm
+        return gathered.join(sv.hint("shuffle_hash"), "vertex").select(
+            "vertex",
+            (F.lit(coef) * F.col("s") + F.lit(damping) * F.col("gathered")).alias("pr"),
+        )
+
+    # the personalized loop checkpoints every superstep: carrying the
+    # teleport join across supersteps measured slower
+    return ranks, step, sv is not None
 
 
-def pagerank(
-    edges: DataFrame,
-    verts: DataFrame,
-    damping: float = 0.85,
-    max_iter: int = 20,
-    tol: float | None = 1e-6,
-    checkpoint_manager=None,
-    job_id: str = "pagerank",
-    truncate_every: int = 3,
-    shuffle_partitions: int | None = None,
-    max_segment: int | None = None,
-    dense_relabel: bool = False,
-) -> PageRankResult:
-    """Exact power iteration. ``tol`` is the L1-delta convergence threshold;
-    pass ``tol=None`` to run exactly ``max_iter`` supersteps (the
-    oracle-comparable fixed-iteration mode, skipping delta computation).
+def _iterate(ranks, step, max_iter, tol, t_setup, start_iter=0, commit=None,
+             eager=False):
+    """The one superstep loop: supersteps start_iter+1..max_iter, stopping
+    early once the L1 delta is ≤ ``tol``; ``commit(it, ranks, metrics)``
+    persists each superstep for resumable runs. A superstep is
+    checkpointed every TRUNCATE_EVERY supersteps, and every superstep when
+    the delta or a commit reads it or the setup asks for it (``eager``)."""
+    setup_sec = time.time() - t_setup
+    t_loop = time.time()
+    history: list[dict] = []
+    l1 = float("inf")
+    it = start_iter
+    for it in range(start_iter + 1, max_iter + 1):
+        t0 = time.time()
+        new_ranks = step(ranks)
+        # intermediate truncation bounds plan depth; on the final superstep
+        # the caller's action materializes anyway, so a barrier right
+        # before it is pure overhead
+        if (
+            it == max_iter
+            or (it % TRUNCATE_EVERY == 0 and max_iter - it > 1)
+            or tol is not None
+            or commit is not None
+            or eager
+        ):
+            new_ranks = new_ranks.localCheckpoint(eager=True)
+        if tol is not None:
+            l1 = (
+                new_ranks.join(ranks.withColumnRenamed("pr", "pr_old"), "vertex")
+                .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))))
+                .first()[0]
+            )
+        ranks = new_ranks
+        wall_ms = int((time.time() - t0) * 1000)
+        history.append({"iteration": it, "l1_delta": l1, "wall_ms": wall_ms})
+        if commit is not None:
+            commit(it, ranks, {"l1_delta": l1, "wall_ms": wall_ms})
+        if tol is not None and l1 <= tol:
+            break
+    return PageRankResult(ranks, it, l1, history, setup_sec, time.time() - t_loop)
 
-    ``truncate_every`` controls lineage truncation cadence: localCheckpoint
-    is a materialization barrier, so doing it every superstep doubles
-    fixed costs; every k-th superstep bounds plan depth at k joins while
-    amortizing the barrier.
 
-    ``shuffle_partitions`` (e.g. LayoutPlan.shuffle_partitions from the
-    stats pass) sets the single partition count P used for BOTH the cached
-    CSR and the rank state, which is what makes the scatter join
-    exchange-free (see below); defaults to the session shuffle setting.
-
-    ``max_segment`` (e.g. LayoutPlan.csr_max_segment, set when the degree
-    histogram shows hub sources): builds the CSR with hub successor lists
-    split into ≤ ~max_segment segments so no single task ever explodes a
-    hub's entire fan-out (graph_build.build_csr_segments). Float summation
-    order changes (segments gather independently), so the fixed-iteration
-    oracle mode keeps max_segment=None; results agree to ~1e-15 per vertex.
-
-    ``dense_relabel=True`` relabels the graph to dense 0..N-1 ids before
-    the loop and maps the ranks back at the end. Measured
-    (BENCH_EXCHANGE.json, local[8], 8.6M edges): dense ids move 29% fewer
-    bytes per edge per superstep through the gather exchange than
-    full-entropy xxhash64 ids (lz4 compresses low-entropy keys; narrowing
-    the column types is a no-op — UnsafeRow slots are 8 B and sum buffers
-    double). At sandbox scale loop TIME is within host noise; the bytes
-    reduction is the quantity that matters once the exchange saturates
-    bandwidth/network at cluster scale — and a dense universe is exactly
-    the reference's design (src/ans/mod.rs:44). Off for the oracle
-    queries only because re-partitioned sums change float association
-    order (~1e-16 per vertex).
-    """
+def _uniform(
+    edges, verts, damping, max_iter, tol, p=None, weighted=False, max_segment=None,
+    dense_relabel=False, checkpoint_manager=None, job_id="pagerank",
+    probe=False, release_caches=None,
+) -> PageRankResult | DataFrame:
+    """Uniform-teleport PageRank. ``probe=True`` returns the plan probe
+    instead: superstep 1 executed and checkpointed, superstep 2
+    un-executed (``release_caches``: see ``superstep_probe``)."""
     t_setup = time.time()
     spark = edges.sparkSession
     n = verts.count()
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # Co-partitioning contract: csr is hash-partitioned on src with exactly
-    # P partitions and cached; ranks are hash-partitioned on vertex with the
-    # same P (the gather's groupBy(vertex) emits HashPartitioning(vertex, P)
-    # once AQE partition coalescing is off, and localCheckpoint preserves
-    # it). Both sides of the scatter join then satisfy the join's required
-    # distribution, and the shuffle_hash hint (build = V-sized ranks)
-    # removes the SortMergeJoin sorts — so a superstep plans exactly ONE
-    # exchange: the E-sized gather (verified: tools/plan_audit.py check 9).
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-
-    ids = None
-    csr = None
-    dangling_verts = None
-    # try/finally: a failure ANYWHERE after the conf snapshot — including
-    # the dense-relabel materialization and the CSR build — must not leave
-    # AQE partition coalescing disabled for the whole session, nor leak
-    # the cached loop invariants
-    try:
-        spark.conf.set(coalesce_key, "false")
+    p = p or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with superstep.kernel_scope(spark, release_caches) as cache:
         if dense_relabel:
             from .graph_build import dense_ids
 
-            ids = dense_ids(verts, num_partitions=p).persist()
+            ids = cache(dense_ids(verts, num_partitions=p))
             ids.count()
             edges = (
                 edges.join(
@@ -282,213 +162,127 @@ def pagerank(
                 .select(F.col("s").alias("src"), F.col("d").alias("dst"))
             )
             verts = ids.select(F.col("dense_id").alias("vertex"))
-
-        if max_segment is not None:
-            from .graph_build import build_csr_segments
-
-            csr_base = build_csr_segments(edges, max_segment).withColumnRenamed(
-                "outdeg", "od"
-            )
-        else:
-            csr_base = edges.groupBy("src").agg(
-                F.collect_list("dst").alias("dsts"), F.count("*").alias("od")
-            )
-        csr = _pin_src_partitions(
-            csr_base.select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w")),
-            p,
-            spark,
-            force=max_segment is not None,
-        ).persist()
-        n_sources = csr.count()
-        if max_segment is not None:
-            # segmented CSR has >1 row per hub source; count distinct srcs
-            n_sources = csr.select("src").distinct().count()
-        # Loop-invariant: dangling vertex set (often empty for web graphs)
-        # — a vertex with outdeg > 0 has exactly one CSR row, so
-        # #CSR rows == n proves there are none WITHOUT the V⋈V anti-join
-        # the detection used to pay (the count is already materialized by
-        # the cache priming above); the anti-join is built only when the
-        # counts differ.
-        has_dangling = n_sources < n
-        dangling_verts = None
-        if has_dangling:
-            dangling_verts = verts.join(
-                csr.select(F.col("src").alias("vertex")), "vertex", "left_anti"
-            ).persist()
-            dangling_verts.count()
-
-        start_iter = 0
+        start_iter, commit = 0, None
         ranks = verts.select("vertex", F.lit(1.0 / n).alias("pr"))
-        # resume fingerprint: a snapshot from a run with different damping,
-        # a different vertex universe, or a DIFFERENT EDGE SET must be
-        # rejected, not silently continued (the reference's phases are
-        # per-compression-run artifacts, ans/mod.rs:62-68); edge signature
-        # = order-insensitive (count, hash-sum), same scheme as
-        # connected_components
-        ckpt_params = {"damping": damping, "n": n}
         if checkpoint_manager is not None:
+            # resume fingerprint: a snapshot from a run with a different
+            # damping, vertex universe or EDGE SET is rejected, not
+            # silently continued; the edge signature is the order-
+            # insensitive (count, hash-sum) of connected_components
             from .components import _edge_signature
 
             en, esig = _edge_signature(edges)
-            ckpt_params.update({"edges_n": en, "edges_sig": str(esig)})
-            resumed = checkpoint_manager.latest_snapshot(job_id, params=ckpt_params)
+            params = {"damping": damping, "n": n, "edges_n": en, "edges_sig": str(esig)}
+            resumed = checkpoint_manager.latest_snapshot(job_id, params=params)
             if resumed is not None:
                 start_iter, ranks = resumed
-        ranks = ranks.repartition(p, "vertex").localCheckpoint(eager=True)
-        # zero-contribution seed row per vertex: folds the "apply" outer
-        # join into the gather shuffle (IEEE x+0.0 == x keeps values
-        # unchanged). Derived as a narrow projection of the CHECKPOINTED
-        # initial rank state — same vertex set, but no separate V-sized
-        # persist + count job (round-7: one fewer setup job per call).
-        zeros = ranks.select("vertex", F.lit(0.0).alias("c"))
-        setup_sec = time.time() - t_setup
-        t_loop = time.time()
 
-        history: list[dict] = []
-        l1 = float("inf")
-        it = start_iter
-        for it in range(start_iter + 1, max_iter + 1):
-            t0 = time.time()
-            dangling = (
-                ranks.join(dangling_verts, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-                if has_dangling
-                else 0.0
-            )
-            base = (1.0 - damping) / n + damping * dangling / n
-            new_ranks = _superstep_frame(csr, ranks, zeros, base, damping)
-            last = it == max_iter
-            # intermediate truncation bounds plan depth for long runs; on
-            # the final superstep the caller's action materializes anyway,
-            # so a mid-loop barrier right before it is pure overhead
-            if last or (it % truncate_every == 0 and max_iter - it > 1) or tol is not None or checkpoint_manager:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-            if tol is not None:
-                l1 = (
-                    new_ranks.join(ranks.withColumnRenamed("pr", "pr_old"), "vertex")
-                    .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))))
-                    .first()[0]
-                )
-            ranks = new_ranks
-            wall_ms = int((time.time() - t0) * 1000)
-            history.append({"iteration": it, "l1_delta": l1, "wall_ms": wall_ms})
-            if checkpoint_manager is not None:
-                checkpoint_manager.commit(
-                    job_id, it, ranks, {"l1_delta": l1, "wall_ms": wall_ms}, params=ckpt_params
-                )
-            if tol is not None and l1 <= tol:
-                break
-        loop_sec = time.time() - t_loop
-        if ids is not None:
-            # map dense ids back to the caller's vertex ids; materialize
-            # before the id map's cache is released below
-            ranks = ranks.join(
+            def commit(it, r, metrics):
+                checkpoint_manager.commit(job_id, it, r, metrics, params=params)
+
+        ranks, step, eager = _setup(
+            cache, edges, verts, n, p, ranks.repartition(p, "vertex"), damping,
+            max_segment=max_segment, weighted=weighted,
+        )
+        if probe:
+            return step(step(ranks).localCheckpoint(eager=True))
+        res = _iterate(ranks, step, max_iter, tol, t_setup, start_iter, commit, eager)
+        if dense_relabel:
+            # map dense ids back to the caller's ids; materialize before
+            # the id map's cache is released
+            res.ranks = res.ranks.join(
                 ids.select(F.col("vertex").alias("orig"), F.col("dense_id").alias("vertex")),
                 "vertex",
             ).select(F.col("orig").alias("vertex"), "pr").localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        if csr is not None:
-            csr.unpersist()
-        if dangling_verts is not None:
-            dangling_verts.unpersist()
-        if ids is not None:
-            ids.unpersist()
-    return PageRankResult(
-        ranks=ranks,
-        iterations=it,
-        l1_delta=l1,
-        history=history,
-        setup_sec=setup_sec,
-        loop_sec=loop_sec,
-    )
+    return res
 
 
-def _ppr_superstep_frame(csr, pr, zeros, sv, coef: float, damping: float) -> DataFrame:
-    """One PPR superstep on the SAME single-exchange discipline as the
-    flagship loop: scatter (exchange-free shuffle-hash join on the
-    co-partitioned CSR + narrow explode), gather (the ONE per-superstep
-    shuffle: groupBy(vertex).sum over the explode output ∪ zero rows),
-    apply (exchange-free shuffle-hash join of the gather output against
-    the co-partitioned teleport vector — both sides HashPartitioning
-    (vertex, P), so no exchange and no sort)."""
-    scattered = csr.join(
-        pr.hint("shuffle_hash"), csr["src"] == pr["vertex"]
-    ).select(F.explode("dsts").alias("vertex"), (F.col("pr") * F.col("w")).alias("c"))
-    gathered = (
-        scattered.unionAll(zeros).groupBy("vertex").agg(F.sum("c").alias("g"))
-    )
-    return gathered.join(sv.hint("shuffle_hash"), "vertex").select(
-        "vertex",
-        (F.lit(coef) * F.col("s") + F.lit(damping) * F.col("g")).alias("pr"),
-    )
-
-
-def personalized_pagerank_converged(
+def pagerank(
     edges: DataFrame,
     verts: DataFrame,
-    seeds: DataFrame,
-    damping: float = 0.5,
-    max_iter: int = 35,
-    tol: float = 1e-6,
+    damping: float = 0.85,
+    max_iter: int = 20,
+    tol: float | None = 1e-6,
+    checkpoint_manager=None,
+    job_id: str = "pagerank",
     shuffle_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
-    """Convergence-mode PPR: the same single-exchange superstep loop run
-    until the L1 delta between consecutive iterations is ≤ ``tol``
-    (the `pagerank_converged` stopping rule applied to the personalized
-    vector). Returns (ranks, iterations). Gate query `ppr_converged`
-    unrolls the identical rule in DuckDB — consecutive deltas shrink
-    geometrically (~damping per iteration) while cross-engine summation
-    drift is ~1e-15 relative, so the threshold comparison cannot flip."""
-    return _ppr_loop(
-        edges, verts, seeds, damping, max_iter, tol, shuffle_partitions
+    max_segment: int | None = None,
+    dense_relabel: bool = False,
+) -> PageRankResult:
+    """Exact power iteration. ``tol`` is the L1-delta convergence threshold;
+    pass ``tol=None`` to run exactly ``max_iter`` supersteps (the
+    oracle-comparable fixed-iteration mode, skipping delta computation).
+
+    ``shuffle_partitions`` (e.g. LayoutPlan.shuffle_partitions from the
+    stats pass) sets the partition count P shared by the CSR and the rank
+    state; defaults to the session shuffle setting.
+
+    ``max_segment`` (e.g. LayoutPlan.csr_max_segment, set when the degree
+    histogram shows hub sources): builds the CSR with hub successor lists
+    split into ≤ ~max_segment segments so no single task ever explodes a
+    hub's entire fan-out (graph_build.build_csr_segments). Float summation
+    order changes (segments gather independently), so the fixed-iteration
+    oracle mode keeps max_segment=None; results agree to ~1e-15 per vertex.
+
+    ``dense_relabel=True`` relabels the graph to dense 0..N-1 ids before
+    the loop and maps the ranks back at the end. Measured
+    (BENCH_EXCHANGE.json, local[8], 8.6M edges): dense ids move 29% fewer
+    bytes per edge per superstep through the gather exchange than
+    full-entropy xxhash64 ids (lz4 compresses low-entropy keys). A dense
+    universe is the reference's design; off for the oracle queries only
+    because re-partitioned sums change float association order (~1e-16
+    per vertex).
+    """
+    return _uniform(
+        edges, verts, damping, max_iter, tol, shuffle_partitions,
+        max_segment=max_segment, dense_relabel=dense_relabel,
+        checkpoint_manager=checkpoint_manager, job_id=job_id,
     )
 
 
-def personalized_pagerank(
-    edges: DataFrame,
+def pagerank_weighted(
+    edges_w: DataFrame,
     verts: DataFrame,
-    seeds: DataFrame,
     damping: float = 0.85,
     num_iter: int = 5,
-    shuffle_partitions: int | None = None,
-) -> DataFrame:
-    """Personalized PageRank (the TrustRank shape: teleport restricted to
-    a trusted seed set) — (vertex, pr) after ``num_iter`` exact power
-    iterations with teleport vector s(v) = 1/|seeds| on the seed set.
+) -> PageRankResult:
+    """Fixed-iteration PageRank over WEIGHTED arcs (src, dst, wt) — the
+    web-graph variant where an arc's transition probability is its weight
+    share wt/Σ_dst wt (anchor-text multiplicity, link position, crawl
+    frequency). Weights must be strictly positive (a zero-total source
+    would need the dangling treatment; the builders guarantee wt >= 1).
+    Dangling = vertices with no out-arc, mass redistributed uniformly.
 
-        pr_{i+1}(v) = ((1−d) + d·dm_i) · s(v) + d · Σ_{u→v} pr_i(u)/outdeg(u)
-
-    with dangling mass dm redistributed to the seeds (the personalized
-    analogue of uniform redistribution). Plan shape: INHERITS the flagship
-    ``pagerank`` loop's co-partitioned single-exchange superstep (round-3
-    verdict item 6) — the cached CSR is hash-partitioned on src with P
-    partitions, rank state and the teleport vector on vertex with the same
-    P, AQE partition coalescing is suspended inside the loop, and
-    shuffle_hash hints remove the SortMergeJoin sorts; the teleport apply
-    rides a second exchange-free co-partitioned join (tools/plan_audit.py
-    check 17 asserts exactly one exchange per superstep). Driver-side
-    scalars mirror the uniform loop's float-op order; per-vertex sums are
-    order-free to ~1e-16 and the gate rounds 6dp
-    (gate query `personalized_pagerank`)."""
-    pr, _ = _ppr_loop(
-        edges, verts, seeds, damping, num_iter, None, shuffle_partitions
-    )
-    return pr
+    Scale note: the weighted CSR is unsegmented — a hub SOURCE's whole
+    (dst, wn) array sits in one row. Out-degree is author-bounded on the
+    web (fan-in skews), and since wn is normalized per source, segments
+    would just carry their slice of it."""
+    return _uniform(edges_w, verts, damping, num_iter, None, weighted=True)
 
 
-def _ppr_loop(
+def superstep_probe(
     edges: DataFrame,
     verts: DataFrame,
-    seeds: DataFrame,
-    damping: float,
-    max_iter: int,
-    tol: float | None,
-    shuffle_partitions: int | None,
-) -> tuple[DataFrame, int]:
+    damping: float = 0.85,
+    release_caches: list | None = None,
+) -> DataFrame:
+    """The un-executed superstep-2 frame of ``pagerank`` for plan audits:
+    the production setup and superstep 1 run and are checkpointed, so the
+    frame is the production plan. Pass ``release_caches=[]`` to receive the
+    cached frames the plan reads and unpersist them AFTER inspecting it;
+    without it they are released at once (fine for executing, but the
+    inspected plan then re-expands the cached lineage)."""
+    return _uniform(
+        edges, verts, damping, 2, None, probe=True, release_caches=release_caches
+    )
+
+
+def _personalized(edges, verts, seeds, damping, max_iter, tol, probe=False,
+                  release_caches=None):
+    """Personalized PageRank; ``probe``/``release_caches`` as in ``_uniform``."""
+    t_setup = time.time()
     spark = edges.sparkSession
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # normalize the seed set BEFORE sizing the teleport: duplicate seed
     # rows or seeds outside the vertex universe would otherwise inflate
     # n_seeds while sv sums to < 1 — silently losing teleport mass
@@ -501,217 +295,81 @@ def _ppr_loop(
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     s_val = 1.0 / n_seeds
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-    sv = None
-    csr = None
-    dangling_verts = None
-    try:
-        spark.conf.set(coalesce_key, "false")
-        sv = (
-            verts.join(
-                seeds.select("vertex").withColumn("_is_seed", F.lit(True)),
-                "vertex",
-                "left",
-            )
+    with superstep.kernel_scope(spark, release_caches) as cache:
+        sv = cache(
+            verts.join(seeds.withColumn("_is_seed", F.lit(True)), "vertex", "left")
             .select(
                 "vertex",
                 F.when(F.col("_is_seed"), F.lit(s_val)).otherwise(F.lit(0.0)).alias("s"),
             )
             .repartition(p, "vertex")
-            .persist()
         )
-        n_verts = sv.count()
-        csr = _pin_src_partitions(
-            edges.groupBy("src")
-            .agg(F.collect_list("dst").alias("dsts"), F.count("*").alias("od"))
-            .select("src", "dsts", (F.lit(1.0) / F.col("od")).alias("w")),
-            p,
-            spark,
-        ).persist()
-        n_sources = csr.count()
-        # zero seed rows ride the cached teleport vector — a narrow
-        # projection, not a third V-sized persist+count
-        zeros = sv.select("vertex", F.lit(0.0).alias("c"))
-        # one CSR row per out-degreed vertex: equal counts prove there is
-        # no dangling mass without the V⋈V anti-join (pagerank discipline)
-        has_dangling = n_sources < n_verts
-        dangling_verts = None
-        if has_dangling:
-            dangling_verts = verts.join(
-                csr.select(F.col("src").alias("vertex")), "vertex", "left_anti"
-            ).persist()
-            dangling_verts.count()
-        # sv is already hash-partitioned (vertex, p) and cached; the
-        # narrow projection preserves that, so no explicit repartition
-        pr = sv.select("vertex", F.col("s").alias("pr")).localCheckpoint(
-            eager=True
+        n = sv.count()
+        # sv is already hash-partitioned (vertex, p): the narrow projection
+        # keeps that, so the initial ranks need no repartition
+        ranks, step, eager = _setup(
+            cache, edges, verts, n, p, sv.select("vertex", F.col("s").alias("pr")),
+            damping, sv=sv,
         )
-        it = 0
-        converged = tol is None
-        for it in range(1, max_iter + 1):
-            dm = (
-                pr.join(dangling_verts, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-                if has_dangling
-                else 0.0
-            )
-            coef = (1.0 - damping) + damping * dm
-            new_pr = _ppr_superstep_frame(
-                csr, pr, zeros, sv, coef, damping
-            ).localCheckpoint(eager=True)
-            if tol is not None:
-                l1 = (
-                    new_pr.join(pr.withColumnRenamed("pr", "pr_old"), "vertex")
-                    .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))))
-                    .first()[0]
-                )
-                pr = new_pr
-                if l1 <= tol:
-                    converged = True
-                    break
-            else:
-                pr = new_pr
-        if not converged:
-            # loudly distinguish "converged exactly at max_iter" from
-            # "exhausted max_iter with l1 > tol" — library callers would
-            # otherwise get silently-unconverged ranks (the DuckDB oracle
-            # returns zero rows in this regime, so the gate config never
-            # reaches here)
-            raise RuntimeError(
-                f"personalized_pagerank_converged: L1 delta still > {tol} "
-                f"after max_iter={max_iter}; raise max_iter or tol"
-            )
-        return pr, it
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        for c in (sv, csr, dangling_verts):
-            if c is not None:
-                c.unpersist()
+        if probe:
+            return step(step(ranks).localCheckpoint(eager=True))
+        return _iterate(ranks, step, max_iter, tol, t_setup, eager=eager)
 
 
-def pagerank_weighted(
-    edges_w: DataFrame,
+def personalized_pagerank(
+    edges: DataFrame,
     verts: DataFrame,
+    seeds: DataFrame,
     damping: float = 0.85,
     num_iter: int = 5,
-    shuffle_partitions: int | None = None,
-    truncate_every: int = 3,
-) -> PageRankResult:
-    """Fixed-iteration PageRank over WEIGHTED arcs (src, dst, wt) — the
-    web-graph variant where an arc's transition probability is its weight
-    share wt/Σ_dst wt (anchor-text multiplicity, link position, crawl
-    frequency). Weights must be strictly positive (a zero-total source
-    would need the dangling treatment; the builders guarantee wt >= 1).
+) -> DataFrame:
+    """Personalized PageRank (the TrustRank shape: teleport restricted to
+    a trusted seed set) — (vertex, pr) after ``num_iter`` exact power
+    iterations with teleport vector s(v) = 1/|seeds| on the seed set.
 
-    Same superstep discipline as ``pagerank`` (module docstring): the CSR
-    row carries pre-normalized per-successor weights wn = wt/tw computed
-    ONCE at build (an array transform, no per-superstep division), the
-    scatter join is exchange- and sort-free on co-partitioned state, and
-    the gather is the single per-superstep shuffle with map-side partial
-    sums. Dangling = vertices with no out-arc, mass redistributed
-    uniformly; sum(rank) == 1 every iteration.
+        pr_{i+1}(v) = ((1−d) + d·dm_i) · s(v) + d · Σ_{u→v} pr_i(u)/outdeg(u)
 
-    Scale note: the weighted CSR is unsegmented — a hub SOURCE's whole
-    (dst, wn) array sits in one row, the same trade as the base
-    ``pagerank`` default. For graphs whose OUT-degree is hub-skewed
-    (rare on the web: fan-in skews, fan-out is author-bounded), port
-    build_csr_segments' split (graph_build.py) with per-segment weight
-    shares — the normalization is per-source, so segments just carry
-    their slice of the already-normalized wn."""
-    t_setup = time.time()
-    spark = edges_w.sparkSession
-    n = verts.count()
-    p = shuffle_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    coalesce_prev = spark.conf.get(coalesce_key, "true")
-    csr = None
-    dangling_verts = None
-    try:
-        spark.conf.set(coalesce_key, "false")
-        csr = (
-            edges_w.groupBy("src")
-            .agg(
-                F.collect_list(F.struct(F.col("dst"), F.col("wt"))).alias("prs"),
-                F.sum("wt").alias("tw"),
-            )
-            .select(
-                "src",
-                F.transform(
-                    "prs",
-                    lambda s: F.struct(
-                        s["dst"].alias("dst"), (s["wt"] / F.col("tw")).alias("wn")
-                    ),
-                ).alias("prs"),
-            )
-        )
-        csr = _pin_src_partitions(csr, p, spark).persist()
-        n_sources = csr.count()
-        # equal counts prove no dangling mass — see pagerank()
-        has_dangling = n_sources < n
-        dangling_verts = None
-        if has_dangling:
-            dangling_verts = verts.join(
-                csr.select(F.col("src").alias("vertex")), "vertex", "left_anti"
-            ).persist()
-            dangling_verts.count()
+    with dangling mass dm redistributed to the seeds (the personalized
+    analogue of uniform redistribution). Duplicate seeds and seeds outside
+    ``verts`` are dropped; an empty seed set raises ``ValueError``. The
+    teleport apply rides a second exchange-free co-partitioned join, so a
+    superstep still plans exactly one exchange (gate query
+    `personalized_pagerank`)."""
+    return _personalized(edges, verts, seeds, damping, num_iter, None).ranks
 
-        ranks = (
-            verts.select("vertex", F.lit(1.0 / n).alias("pr"))
-            .repartition(p, "vertex")
-            .localCheckpoint(eager=True)
+
+def personalized_pagerank_converged(
+    edges: DataFrame,
+    verts: DataFrame,
+    seeds: DataFrame,
+    damping: float = 0.5,
+    max_iter: int = 35,
+    tol: float = 1e-6,
+) -> tuple[DataFrame, int]:
+    """Convergence-mode PPR: the same loop run until the L1 delta between
+    consecutive iterations is ≤ ``tol``. Returns (ranks, iterations). Gate
+    query `ppr_converged` unrolls the identical rule in DuckDB —
+    consecutive deltas shrink geometrically (~damping per iteration) while
+    cross-engine summation drift is ~1e-15 relative, so the threshold
+    comparison cannot flip. Raises ``RuntimeError`` when ``max_iter`` is
+    exhausted with the delta still > ``tol`` (the DuckDB oracle returns
+    zero rows in that regime, so the gate config never reaches it)."""
+    res = _personalized(edges, verts, seeds, damping, max_iter, tol)
+    if res.l1_delta > tol:
+        raise RuntimeError(
+            f"personalized_pagerank_converged: L1 delta still > {tol} "
+            f"after max_iter={max_iter}; raise max_iter or tol"
         )
-        # zero seed rows as a narrow projection of the checkpointed rank
-        # state — no separate V-sized persist+count (see pagerank())
-        zeros = ranks.select("vertex", F.lit(0.0).alias("c"))
-        setup_sec = time.time() - t_setup
-        t_loop = time.time()
-        history: list[dict] = []
-        it = 0
-        for it in range(1, num_iter + 1):
-            t0 = time.time()
-            dangling = (
-                ranks.join(dangling_verts, "vertex", "left_semi")
-                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)))
-                .first()[0]
-                if has_dangling
-                else 0.0
-            )
-            base = (1.0 - damping) / n + damping * dangling / n
-            scattered = csr.join(
-                ranks.hint("shuffle_hash"), csr["src"] == ranks["vertex"]
-            ).select(
-                F.explode("prs").alias("e"), "pr"
-            ).select(
-                F.col("e.dst").alias("vertex"),
-                (F.col("pr") * F.col("e.wn")).alias("c"),
-            )
-            new_ranks = (
-                scattered.unionAll(zeros)
-                .groupBy("vertex")
-                .agg(F.sum("c").alias("gathered"))
-                .select(
-                    "vertex",
-                    (F.lit(base) + F.lit(damping) * F.col("gathered")).alias("pr"),
-                )
-            )
-            if it == num_iter or it % truncate_every == 0:
-                new_ranks = new_ranks.localCheckpoint(eager=True)
-            ranks = new_ranks
-            history.append(
-                {"iteration": it, "wall_ms": int((time.time() - t0) * 1000)}
-            )
-        return PageRankResult(
-            ranks=ranks,
-            iterations=it,
-            l1_delta=float("nan"),
-            history=history,
-            setup_sec=setup_sec,
-            loop_sec=time.time() - t_loop,
-        )
-    finally:
-        spark.conf.set(coalesce_key, coalesce_prev)
-        for c in (csr, dangling_verts):
-            if c is not None:
-                c.unpersist()
+    return res.ranks, res.iterations
+
+
+def ppr_superstep_probe(
+    edges: DataFrame,
+    verts: DataFrame,
+    seeds: DataFrame,
+    damping: float = 0.85,
+    release_caches: list | None = None,
+) -> DataFrame:
+    """The un-executed superstep-2 frame of the personalized loop, with the
+    ``release_caches`` contract of ``superstep_probe``."""
+    return _personalized(edges, verts, seeds, damping, 2, None, True, release_caches)
