@@ -3,10 +3,7 @@ from __future__ import annotations
 import itertools
 
 from tests.conftest import seeded_random_graph
-from webgraph_ans_rs_spark.operators.components import (
-    connected_components,
-    connected_components_pointer_jump,
-)
+from webgraph_ans_rs_spark.operators.components import connected_components
 from webgraph_ans_rs_spark.operators.labelprop import label_propagation
 from webgraph_ans_rs_spark.operators.triangles import (
     orient_by_degree,
@@ -103,8 +100,7 @@ def test_cc_long_path(spark):
 def test_cc_star_vs_pointer_jump_on_skewed_graph(spark):
     """One giant component (a hub star swallowing 90% of vertices) plus
     small clusters — the shape where a label-keyed join funnels everything
-    through one shuffle key. Star CC must agree with pointer-jump exactly,
-    and with union-find."""
+    through one shuffle key. Star CC must agree exactly with union-find."""
     n = 500
     es = (
         [(0, i) for i in range(1, 450)]          # giant star
@@ -114,11 +110,7 @@ def test_cc_star_vs_pointer_jump_on_skewed_graph(spark):
     edges = spark.createDataFrame(es, "src long, dst long")
     verts = spark.createDataFrame([(i,) for i in range(n)], "vertex long")
     star = {r.vertex: r.component for r in connected_components(edges, verts).collect()}
-    jump = {
-        r.vertex: r.component
-        for r in connected_components_pointer_jump(edges, verts).collect()
-    }
-    assert star == jump == unionfind_components(es, n)
+    assert star == unionfind_components(es, n)
 
 
 def test_cc_star_round_count_on_path(spark):

@@ -21,6 +21,7 @@ from webgraph_ans_rs_spark.operators.graph_build import (
 from webgraph_ans_rs_spark.operators.labelprop import label_propagation
 
 from tests.conftest import seeded_random_graph
+from tests.test_components_labels_triangles import python_lp
 
 
 def _canon(adj):
@@ -77,22 +78,21 @@ def test_gap_parquet_roundtrip(spark, tmp_path):
 
 
 def test_lp_argmax_agg_equals_window_on_hub(spark):
-    """The hub-safe min_by aggregation argmax must return exactly what the
-    window form returned (count desc, label asc tie-break), including on a
-    hub whose neighbor-label histogram is wide."""
+    """The hub-safe min_by aggregation argmax must return exactly the
+    (count desc, label asc) argmax the window form returned — here checked
+    against the Python LP oracle, which breaks ties to the smallest label
+    — including on a hub whose neighbor-label histogram is wide."""
     hub_edges = [(0, i) for i in range(1, 120)] + [(i, i + 1) for i in range(1, 119)]
     edges = spark.createDataFrame(hub_edges, "src long, dst long")
     verts = spark.createDataFrame([(i,) for i in range(121)], "vertex long")
-    a = sorted(label_propagation(edges, verts, num_iter=3, argmax="agg").collect())
-    w = sorted(label_propagation(edges, verts, num_iter=3, argmax="window").collect())
-    assert a == w
+    got = {r.vertex: r.label for r in label_propagation(edges, verts, num_iter=3).collect()}
+    assert got == python_lp(hub_edges, 121, 3)
 
 
 def test_lp_argmax_agg_equals_window_seeded(spark):
-    edges, verts, _, _ = seeded_random_graph(spark)
-    a = sorted(label_propagation(edges, verts, num_iter=2, argmax="agg").collect())
-    w = sorted(label_propagation(edges, verts, num_iter=2, argmax="window").collect())
-    assert a == w
+    edges, verts, es, n = seeded_random_graph(spark)
+    got = {r.vertex: r.label for r in label_propagation(edges, verts, num_iter=2).collect()}
+    assert got == python_lp(es, n, 2)
 
 
 def test_interval_roundtrip_random_graph(spark):

@@ -218,26 +218,28 @@ def test_transposed_csr_segments_hub_destinations(spark):
 
 
 def test_hyperball_packed_on_hub_graph_matches_columns(spark):
-    """End-to-end through the SEGMENTED transpose: a 1e3-in-degree hub
-    plus a chain must produce estimates bit-identical to the column
-    layout (segmentation must be invisible to the registers)."""
-    from webgraph_ans_rs_spark.operators.neighborhood import hyperball_packed
+    """End-to-end through the SEGMENTED transpose: a 1e4-in-degree hub
+    (more than the default max_segment, so its transpose row really
+    splits) plus a chain must produce estimates bit-identical to the
+    column layout (segmentation must be invisible to the registers)."""
+    from webgraph_ans_rs_spark.operators.neighborhood import (
+        build_transposed_csr,
+        hyperball_packed,
+    )
 
-    star = [(i, 5000) for i in range(1000)]
-    chain = [(5000 + i, 5001 + i) for i in range(5)]
+    hub = 50_000
+    star = [(i, hub) for i in range(10_000)]
+    chain = [(hub + i, hub + 1 + i) for i in range(5)]
     edges = spark.createDataFrame(star + chain, "src long, dst long")
     verts = (
         edges.selectExpr("src as vertex")
         .unionByName(edges.selectExpr("dst as vertex"))
         .distinct()
     )
+    hub_rows = build_transposed_csr(edges, verts, 4).where(f"dst = {hub}").count()
+    assert hub_rows > 1
     col = _nf(hyperball(edges, verts, 3, p=6), col="nf_est")
-    # max_segment small enough that the hub splits into many rows
-    import webgraph_ans_rs_spark.operators.neighborhood as nb
-
-    packed = _nf(
-        nb.hyperball_packed(edges, verts, 3, p=6), col="nf_est"
-    )
+    packed = _nf(hyperball_packed(edges, verts, 3, p=6), col="nf_est")
     assert col == packed
 
 

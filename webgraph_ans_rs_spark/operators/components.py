@@ -1,13 +1,12 @@
-"""Connected components — two implementations, same exact semantics.
+"""Connected components: Kiveris et al.'s alternating large-star /
+small-star.
 
-``connected_components`` (the default) is Kiveris et al.'s alternating
-large-star / small-star: the state is a shrinking *edge set*, and every
-per-round operation is keyed by a plain vertex id whose fan-in is bounded
-by its current degree. This is the web-scale-safe formulation: there is no
-join keyed on a converging component label (in a web graph ~90% of vertices
-end up sharing one label, so a label-keyed join funnels nearly all rows
-through a single shuffle key — the scale defect of the pointer-jump
-variant below, kept for cross-checking). Per round:
+The state is a shrinking *edge set*, and every per-round operation is
+keyed by a plain vertex id whose fan-in is bounded by its current degree.
+This is the web-scale-safe formulation: there is no join keyed on a
+converging component label (in a web graph ~90% of vertices end up
+sharing one label, so a label-keyed join — min-label pointer jumping —
+funnels nearly all rows through a single shuffle key). Per round:
 
   large-star: symmetrize E; per vertex u with neighbors Γ(u),
               m = min(Γ(u) ∪ {u}); emit (v, m) for v ∈ Γ(u), v > u.
@@ -19,13 +18,8 @@ edge set against that V-sized min table (AQE skew-split covers hub keys —
 fan-in bounded by degree, not component size). At fixpoint the edge set is
 a star forest rooted at each component's minimum id; convergence is
 detected with an order-insensitive signature aggregation (count + sum of
-per-edge hashes), no extra join. O(log² n) rounds worst case.
-
-``connected_components_pointer_jump`` is the round-1 min-label +
-pointer-doubling formulation: one (vertex, label) row per vertex, per round
-label' = min(label, min over neighbors, label(label)). Exact same output;
-its jump self-join keys on the converging label, so it is the small-graph /
-cross-check path only.
+per-edge hashes), no extra join. O(log² n) rounds worst case. The tests
+check the labels against an independent union-find.
 
 Lineage is truncated per round (localCheckpoint); with a CheckpointManager
 rounds commit to parquet and runs resume (analogue of the reference's
@@ -36,8 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..plans.derived_graph import undirected_symmetrize
 
 
 def _edge_signature(df: DataFrame) -> tuple[int, object]:
@@ -67,14 +59,9 @@ def connected_components(
     max_rounds: int = 50,
     checkpoint_manager=None,
     job_id: str = "cc",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """(vertex long, component long) via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond").
-
-    ``shuffle_partitions``: optional LayoutPlan.shuffle_partitions for the
-    per-round edge repartition (defaults to the session shuffle setting).
-    """
+    (Kiveris et al., "Connected Components in MapReduce and Beyond")."""
     # canonical big→small orientation; self-loops vanish, duplicates merged
     e = (
         edges.select(
@@ -93,35 +80,25 @@ def connected_components(
         resumed = checkpoint_manager.latest_snapshot(job_id, params=ckpt_params)
         if resumed is not None:
             start_round, e = resumed
-    # round-7: no per-round repartition("src") — the next consumer is the
+    # no per-round repartition("src"): the next consumer is the
     # symmetrizing union (whose output partitioning is unknown to the
-    # planner regardless) followed by a groupBy that shuffles anyway, so
-    # the explicit exchange of the full star edge set bought nothing; the
-    # dedup that canonicalizes each round already leaves a well-spread
-    # HashPartitioning(src, dst). An explicit override is honored when the
-    # caller passes shuffle_partitions (the LayoutPlan path).
-    repart = (
-        (lambda df: df.repartition(shuffle_partitions, "src"))
-        if shuffle_partitions
-        else (lambda df: df)
-    )
-    e = repart(e).localCheckpoint(eager=True)
+    # planner regardless) followed by a groupBy that shuffles anyway, and
+    # the dedup that canonicalizes each round already leaves a
+    # well-spread HashPartitioning(src, dst)
+    e = e.localCheckpoint(eager=True)
 
     sig = _edge_signature(e)
-    converged = False
     for rnd in range(start_round + 1, max_rounds + 1):
-        e_new = _star_round(e, repart).localCheckpoint(eager=True)
-        new_sig = _edge_signature(e_new)
-        e = e_new
+        e = _star_round(e).localCheckpoint(eager=True)
+        new_sig = _edge_signature(e)
         if checkpoint_manager is not None:
             checkpoint_manager.commit(
                 job_id, rnd, e, {"edges": new_sig[0]}, params=ckpt_params
             )
         if new_sig == sig:
-            converged = True
             break
         sig = new_sig
-    if not converged:
+    else:
         # Either the loop exhausted max_rounds, or a resume landed at
         # start_round == max_rounds (empty round range — e.g. re-running a
         # job whose previous run converged exactly at its last round). The
@@ -131,16 +108,14 @@ def connected_components(
         # vertex and non-minimal labels (large/small-star converges in
         # O(log^2 n) rounds, so a realistic max_rounds only trips this on
         # resume-at-fixpoint).
-        if _edge_signature(_star_round(e, repart)) == sig:
-            converged = True
-        else:
+        if _edge_signature(_star_round(e)) != sig:
             raise RuntimeError(
                 f"connected_components: no convergence within max_rounds={max_rounds}"
             )
     return _star_labels(e, verts)
 
 
-def _star_round(e: DataFrame, repart) -> DataFrame:
+def _star_round(e: DataFrame) -> DataFrame:
     """One alternating large-star + small-star round over a canonical
     big→small edge set; returns the new big→small edge set (lazy)."""
     # --- large-star -------------------------------------------------------
@@ -175,71 +150,4 @@ def _star_round(e: DataFrame, repart) -> DataFrame:
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     )
     centers = smins.select("src", F.col("m").alias("dst"))
-    return repart(attached.unionAll(centers).dropDuplicates(["src", "dst"]))
-
-
-def connected_components_pointer_jump(
-    edges: DataFrame,
-    verts: DataFrame,
-    max_rounds: int = 50,
-    checkpoint_manager=None,
-    job_id: str = "cc",
-) -> DataFrame:
-    """(vertex long, component long) for every vertex in ``verts``;
-    isolated vertices are their own component."""
-    und = undirected_symmetrize(edges).persist()
-    und.count()
-
-    labels = verts.select("vertex", F.col("vertex").alias("label"))
-    start_round = 0
-    if checkpoint_manager is not None:
-        resumed = checkpoint_manager.latest_snapshot(job_id)
-        if resumed is not None:
-            start_round, labels = resumed
-    labels = labels.repartition("vertex").localCheckpoint(eager=True)
-
-    for rnd in range(start_round + 1, max_rounds + 1):
-        nbr_min = (
-            und.join(labels, und["dst"] == labels["vertex"])
-            .groupBy(und["src"].alias("vertex"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        jump = (
-            labels.alias("l1")
-            .join(
-                labels.select(
-                    F.col("vertex").alias("jv"), F.col("label").alias("jlabel")
-                ).alias("l2"),
-                F.col("l1.label") == F.col("jv"),
-            )
-            .select(F.col("l1.vertex").alias("vertex"), F.col("jlabel"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "vertex", "left")
-            .join(jump, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    "label",
-                    F.coalesce("nbr_min", F.col("label")),
-                    F.coalesce("jlabel", F.col("label")),
-                ).alias("label"),
-            )
-            .repartition("vertex")
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.select("vertex", F.col("label").alias("old")).alias("o"), "vertex")
-            .where(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if checkpoint_manager is not None:
-            checkpoint_manager.commit(
-                job_id, rnd, labels, {"changed": changed}
-            )
-        if changed == 0:
-            break
-    und.unpersist()
-    return labels.select("vertex", F.col("label").alias("component"))
+    return attached.unionAll(centers).dropDuplicates(["src", "dst"])

@@ -16,16 +16,20 @@ one task. (``-cnt`` cannot overflow: cnt ≥ 1; negating the *label* would
 risk Long.MIN_VALUE with hashed ids, which is why the order key negates the
 count, not the label.)
 
-Fixed-iteration mode (``num_iter``) is what the oracle compares —
-synchronous LP is only well-defined per iteration count.
+Two modes share one loop (``_lp_loop``): fixed-iteration
+``label_propagation`` (``num_iter``; resumable from a CheckpointManager) is
+what the oracle compares — synchronous LP is only well-defined per
+iteration count — and ``label_propagation_converged`` runs self-vote
+supersteps to a fixpoint.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.derived_graph import undirected_symmetrize
+from .superstep import cache_scope
 
 
 def _argmax_labels(hist: DataFrame) -> DataFrame:
@@ -35,15 +39,61 @@ def _argmax_labels(hist: DataFrame) -> DataFrame:
     return hist.groupBy("vertex").agg(F.min_by("nbr_label", ordkey).alias("nbr_label"))
 
 
-def _argmax_labels_window(hist: DataFrame) -> DataFrame:
-    """Window-argmax form, kept as the pytest cross-check for the
-    aggregation rewrite (it was the engine default through round 2; at
-    web scale it puts a hub's whole label histogram in one task)."""
-    w = Window.partitionBy("vertex").orderBy(F.desc("cnt"), F.asc("nbr_label"))
+def _lp_loop(
+    edges: DataFrame,
+    verts: DataFrame,
+    max_iter: int,
+    converge: bool,
+    checkpoint_manager=None,
+    job_id: str = "lp",
+) -> tuple[DataFrame, int]:
+    """THE label-propagation loop: (labels, iterations). Fixed mode runs
+    supersteps up to ``max_iter``, resuming from and committing to
+    ``checkpoint_manager``. ``converge`` adds the self vote and stops at
+    the first superstep that changes no vertex, raising at the bound. The
+    symmetrized edge set is cached for the loop and released on exit,
+    failure included."""
+    with cache_scope() as cache:
+        und = cache(undirected_symmetrize(edges))
+        und.count()
+        labels = verts.select("vertex", F.col("vertex").alias("label"))
+        start, ckpt_params = 0, None
+        if checkpoint_manager is not None:
+            # resume fingerprint (same scheme as CC/PageRank): a snapshot
+            # from a different edge set must be rejected. "argmax" is the
+            # one argmax form there is; it stays so older snapshots resume.
+            from .components import _edge_signature
+
+            en, esig = _edge_signature(und)
+            ckpt_params = {"edges_n": en, "edges_sig": str(esig), "argmax": "agg"}
+            resumed = checkpoint_manager.latest_snapshot(job_id, params=ckpt_params)
+            if resumed is not None:
+                start, labels = resumed
+        labels = labels.localCheckpoint(eager=True)
+        for it in range(start + 1, max_iter + 1):
+            nxt = _lp_step(und, labels, _argmax_labels, converge).localCheckpoint(
+                eager=True
+            )
+            if checkpoint_manager is not None:
+                checkpoint_manager.commit(job_id, it, nxt, {}, params=ckpt_params)
+            if converge and _changed(nxt, labels) == 0:
+                return labels, it
+            labels = nxt
+    if converge:
+        raise RuntimeError(
+            f"label_propagation_converged: labels did not stabilize within "
+            f"max_iter={max_iter} supersteps (synchronous LP can oscillate; "
+            f"raise the bound or break ties asynchronously)"
+        )
+    return labels, max_iter
+
+
+def _changed(nxt: DataFrame, labels: DataFrame) -> int:
+    """# vertices whose label differs between two checkpointed labelings."""
     return (
-        hist.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vertex", "nbr_label")
+        nxt.join(labels.withColumnRenamed("label", "prev"), "vertex")
+        .where(F.col("label") != F.col("prev"))
+        .count()
     )
 
 
@@ -53,38 +103,11 @@ def label_propagation(
     num_iter: int = 5,
     checkpoint_manager=None,
     job_id: str = "lp",
-    argmax: str = "agg",
 ) -> DataFrame:
-    """(vertex long, label long) after exactly ``num_iter`` synchronous steps.
-
-    ``argmax`` selects the per-vertex label-argmax implementation: "agg"
-    (default, hub-safe min_by aggregation) or "window" (row_number form,
-    kept for the equality cross-check in tests)."""
-    pick = _argmax_labels if argmax == "agg" else _argmax_labels_window
-    und = undirected_symmetrize(edges).persist()
-    und.count()
-
-    labels = verts.select("vertex", F.col("vertex").alias("label"))
-    start = 0
-    ckpt_params = None
-    if checkpoint_manager is not None:
-        # resume fingerprint (same scheme as CC/PageRank): a snapshot from
-        # a different edge set or argmax variant must be rejected
-        from .components import _edge_signature
-
-        en, esig = _edge_signature(und)
-        ckpt_params = {"edges_n": en, "edges_sig": str(esig), "argmax": argmax}
-        resumed = checkpoint_manager.latest_snapshot(job_id, params=ckpt_params)
-        if resumed is not None:
-            start, labels = resumed
-    labels = labels.localCheckpoint(eager=True)
-
-    for it in range(start + 1, num_iter + 1):
-        labels = _lp_step(und, labels, pick).localCheckpoint(eager=True)
-        if checkpoint_manager is not None:
-            checkpoint_manager.commit(job_id, it, labels, {}, params=ckpt_params)
-    und.unpersist()
-    return labels
+    """(vertex long, label long) after exactly ``num_iter`` synchronous
+    steps; with a ``checkpoint_manager`` every step commits and a rerun
+    resumes from the latest snapshot of the same edge set."""
+    return _lp_loop(edges, verts, num_iter, False, checkpoint_manager, job_id)[0]
 
 
 def _lp_step(
@@ -113,7 +136,6 @@ def label_propagation_converged(
     edges: DataFrame,
     verts: DataFrame,
     max_iter: int = 32,
-    argmax: str = "agg",
 ) -> tuple[DataFrame, int]:
     """Convergence-mode LP: run synchronous supersteps until the labels
     STABILIZE (one more superstep changes no vertex), the reference
@@ -140,30 +162,4 @@ def label_propagation_converged(
     per superstep on the already-checkpointed frames — the same
     per-superstep action discipline as pagerank's L1-delta loop.
     """
-    pick = _argmax_labels if argmax == "agg" else _argmax_labels_window
-    und = undirected_symmetrize(edges).persist()
-    und.count()
-    labels = (
-        verts.select("vertex", F.col("vertex").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    try:
-        for it in range(1, max_iter + 1):
-            nxt = _lp_step(und, labels, pick, self_vote=True).localCheckpoint(
-                eager=True
-            )
-            changed = (
-                nxt.join(labels.withColumnRenamed("label", "prev"), "vertex")
-                .where(F.col("label") != F.col("prev"))
-                .count()
-            )
-            if changed == 0:
-                return labels, it
-            labels = nxt
-        raise RuntimeError(
-            f"label_propagation_converged: labels did not stabilize within "
-            f"max_iter={max_iter} supersteps (synchronous LP can oscillate; "
-            f"raise the bound or break ties asynchronously)"
-        )
-    finally:
-        und.unpersist()
+    return _lp_loop(edges, verts, max_iter, True)

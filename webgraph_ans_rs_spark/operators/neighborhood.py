@@ -5,27 +5,31 @@ companion statistic of the WebGraph toolchain (Boldi–Vigna HyperBall runs
 over exactly the BVGraph successor lists the reference compresses; the
 reference's graphs ship with .properties recording it). Two forms:
 
-* ``neighborhood_function_exact`` — materializes the reachability pairs
-  per round (distinct-join loop). Exact, but pair-set size is O(sum of
-  ball sizes): fine for calibration and small graphs, quadratic blowup on
-  well-connected ones — that blowup is the entire reason HyperBall
-  exists.
+* ``neighborhood_function_exact`` — per-level pair counts of one BFS
+  ball per source (``bfs.bfs_levels`` keyed by source), summed
+  cumulatively. Exact, but pair-set size is O(sum of ball sizes): fine
+  for calibration and small graphs, quadratic blowup on well-connected
+  ones — that blowup is the entire reason HyperBall exists.
 
 * ``hyperball`` — per-vertex HyperLogLog registers, max-merged along OUT
   edges each superstep. m = 2^p registers are laid out as m COLUMNS, so
-  a superstep is one edges⋈regs join + groupBy(src).agg(max per column):
-  all-JVM, map-side partial max (hub fan-in collapses before the
-  shuffle), two bounded exchanges per superstep (gather by dst, regroup
-  by src; pre-partitioning a transposed CSR by dst would drop it to one,
-  the PageRank-loop discipline — left as the scale optimization knob).
-  Estimates use the standard HLL harmonic mean with
+  a superstep is one edges⋈regs join + groupBy(vertex).agg(max per
+  column): all-JVM, map-side partial max (hub fan-in collapses before
+  the shuffle). The edge side is cached hash-partitioned by dst and the
+  registers leave each superstep hash-partitioned by vertex, so the join
+  is exchange-free and a steady-state superstep plans ONE exchange, the
+  regroup by vertex (tests/test_superstep.py asserts it; the packed
+  layout plans two). Estimates use the standard HLL harmonic mean with
   the linear-counting small-range correction (dominant here: at small t
   most balls hold a handful of vertices). Column layout is comfortable to
   p≈8 (256 agg expressions); beyond that the ARRAY-PACKED layout
   (``hyperball_packed``) stores all m registers in one array<tinyint>
-  column with an explicit map-side combine + zip_with(greatest) final
-  merge — frame width constant in p, precision unbounded (p=10+
-  web-scale runs), and int8 is what crosses the Arrow boundary.
+  column with an explicit map-side combine + partition-local final fold
+  (Arrow/numpy elementwise max) — frame width constant in p, precision unbounded (p=10+
+  web-scale runs), and int8 is what crosses the Arrow boundary. Both
+  layouts run on ONE superstep loop (``_register_supersteps``); the NF
+  rows and the harmonic-centrality accumulation read the registers it
+  yields.
 
   The register hash is a double multiplicative hash in pure int64
   arithmetic and rho comes from ``length(bin(w))`` (exact integer bit
@@ -40,8 +44,14 @@ reference's graphs ship with .properties recording it). Two forms:
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+from itertools import accumulate
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .bfs import bfs_levels
+from .superstep import cache_scope
 
 # 32-bit xor-shift/multiply mix (lowbias32-style finalizer). Domain: ANY
 # int64 vertex id — the id is first reduced mod 2^32 (pmod, negative-safe)
@@ -66,23 +76,21 @@ def neighborhood_function_exact(
     edges: DataFrame, verts: DataFrame, max_t: int
 ) -> DataFrame:
     """(t, nf) for t = 0..max_t, nf = exact # ordered pairs (v, u) with a
-    directed path v→u of length ≤ t (pairs include (v, v))."""
-    reach = verts.select(
-        F.col("vertex").alias("v"), F.col("vertex").alias("u")
-    ).localCheckpoint(eager=True)
-    rows = [(0, reach.count())]
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("nu"))
-    for t in range(1, max_t + 1):
-        reach = (
-            reach.join(e, "u")
-            .select("v", F.col("nu").alias("u"))
-            .unionByName(reach)
-            .dropDuplicates(["v", "u"])
-            .localCheckpoint(eager=True)
-        )
-        rows.append((t, reach.count()))
-    spark = edges.sparkSession
-    return spark.createDataFrame(rows, "t int, nf bigint")
+    directed path v→u of length ≤ t (pairs include (v, v)): the pairs
+    first reached at each level, summed cumulatively — levels past an
+    early-exited expansion add 0, so NF stays at its last value."""
+    balls = _balls_of_every_vertex(edges, verts, max_t)
+    per_level = dict(balls.groupBy("dist").count().collect())
+    nf = accumulate(per_level.get(t, 0) for t in range(max_t + 1))
+    return edges.sparkSession.createDataFrame(list(enumerate(nf)), "t int, nf bigint")
+
+
+def _balls_of_every_vertex(
+    edges: DataFrame, verts: DataFrame, max_t: int
+) -> DataFrame:
+    """(v, vertex, dist): the depth-``max_t`` ball of every vertex v."""
+    sources = verts.select(F.col("vertex").alias("v"), "vertex")
+    return bfs_levels(edges, sources, max_t, key="v")
 
 
 def _rho_and_idx(vcol, p: int):
@@ -154,7 +162,8 @@ def _superstep_plan(
     # register side (guide §3.1); the hash build of the V-sized register
     # frame removes both, and both sides are already hash-partitioned on
     # the join key (e cached by dst, regs out of the previous gather), so
-    # the steady-state join is exchange-free too.
+    # the steady-state join adds no exchange: the superstep plans exactly
+    # one, the regroup by vertex (tests/test_superstep.py).
     gathered = e.join(
         regs.withColumnRenamed("vertex", "dst").hint("shuffle_hash"), "dst"
     ).select(
@@ -167,8 +176,72 @@ def _superstep_plan(
     )
 
 
-def _superstep(e: DataFrame, regs: DataFrame, reg_cols: list[str]) -> DataFrame:
-    return _superstep_plan(e, regs, reg_cols).localCheckpoint(eager=True)
+def _register_supersteps(
+    edges: DataFrame, verts: DataFrame, max_t: int, p: int, packed: bool
+):
+    """THE HyperBall loop: yields (t, regs, estimate) for t = 0..max_t.
+    A register layout supplies its init, its loop-invariant gather side
+    (cached hash-partitioned by its join key ONCE — without it the first
+    superstep inherits the raw scan's partitioning, few fat tasks; the
+    packed path measured a 272 s straggler from exactly this — and every
+    superstep would re-shuffle it), its superstep plan and its estimate
+    expression; each superstep is checkpointed. Consumers read the
+    registers between supersteps. The gather side is released when the
+    loop ends or the generator is closed: consume it with a plain for
+    loop, whose unwinding on a consumer failure closes it at once (a
+    comprehension's traceback would keep it open)."""
+    m = 1 << p
+    p_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    with cache_scope() as cache:
+        if packed:
+            regs = _init_regs_packed(verts, p, num_partitions=p_shuffle)
+            side = cache(build_transposed_csr(edges, verts, p_shuffle))
+            est = _estimate_packed(m)
+            plan = lambda r: _superstep_packed_plan(side, r, m)  # noqa: E731
+        else:
+            reg_cols = [f"r{j}" for j in range(m)]
+            regs = _init_regs(verts, p, reg_cols)
+            side = cache(edges.select("src", "dst").repartition(p_shuffle, "dst"))
+            est = _estimate(m, reg_cols)
+            plan = lambda r: _superstep_plan(side, r, reg_cols)  # noqa: E731
+        side.count()
+        yield 0, regs, est
+        for t in range(1, max_t + 1):
+            regs = plan(regs).localCheckpoint(eager=True)
+            yield t, regs, est
+
+
+def _nf_rows(
+    edges: DataFrame, verts: DataFrame, max_t: int, p: int, packed: bool
+) -> DataFrame:
+    """(t, nf_est): Σ of the per-vertex estimates after each superstep,
+    rounded 4dp HALF_UP to match DuckDB's ROUND (python round() is
+    banker's)."""
+    rows = []
+    for t, regs, est in _register_supersteps(edges, verts, max_t, p, packed):
+        # coalesce: SUM over an empty register frame (empty graph) is NULL
+        nf = regs.agg(F.coalesce(F.sum(est), F.lit(0.0))).collect()[0][0]
+        nf4 = Decimal(repr(float(nf))).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+        rows.append((t, float(nf4)))
+    return edges.sparkSession.createDataFrame(rows, "t int, nf_est double")
+
+
+def _harmonic(
+    edges: DataFrame, verts: DataFrame, max_t: int, p: int, packed: bool
+) -> DataFrame:
+    """(vertex, hc): hc += (|ball(t)| − |ball(t−1)|) / t after each
+    superstep, accumulated left to right and checkpointed per step."""
+    for t, regs, est in _register_supersteps(edges, verts, max_t, p, packed):
+        if t == 0:
+            state = regs.select("vertex", est.alias("prev"), F.lit(0.0).alias("hc"))
+        else:
+            cur = regs.select("vertex", est.alias("cur"))
+            hc = F.col("hc") + (F.col("cur") - F.col("prev")) / F.lit(float(t))
+            state = state.join(cur, "vertex").select(
+                "vertex", F.col("cur").alias("prev"), hc.alias("hc")
+            )
+        state = state.localCheckpoint(eager=True)
+    return state.select("vertex", F.round("hc", 4).alias("hc"))
 
 
 def hyperball(
@@ -176,25 +249,7 @@ def hyperball(
 ) -> DataFrame:
     """(t, nf_est) for t = 0..max_t — HyperBall estimate of the
     neighbourhood function, rounded 4dp."""
-    m = 1 << p
-    reg_cols = [f"r{j}" for j in range(m)]
-    regs = _init_regs(verts, p, reg_cols)
-    spark = edges.sparkSession
-    rows = [(0, _nf_of(regs, m, reg_cols))]
-    # loop-invariant gather side, hash-partitioned by dst ONCE and cached:
-    # without it the first superstep inherits the raw scan's partitioning
-    # (few fat tasks; the packed path measured a 272 s straggler from
-    # exactly this) and every superstep re-shuffles the edge side
-    p_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst").repartition(p_shuffle, "dst").persist()
-    e.count()
-    try:
-        for t in range(1, max_t + 1):
-            regs = _superstep(e, regs, reg_cols)
-            rows.append((t, _nf_of(regs, m, reg_cols)))
-    finally:
-        e.unpersist()
-    return spark.createDataFrame(rows, "t int, nf_est double")
+    return _nf_rows(edges, verts, max_t, p, packed=False)
 
 
 def harmonic_centrality(
@@ -212,35 +267,7 @@ def harmonic_centrality(
     rounding covers libm ulps). Truncation at max_t is standard for
     HyperBall runs bounded by iteration count; at convergence
     (max_t ≥ diameter) it IS the (outbound) harmonic centrality."""
-    m = 1 << p
-    reg_cols = [f"r{j}" for j in range(m)]
-    regs = _init_regs(verts, p, reg_cols)
-    state = regs.select(
-        "vertex",
-        _estimate(m, reg_cols).alias("prev"),
-        F.lit(0.0).alias("hc"),
-    ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    p_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = edges.select("src", "dst").repartition(p_shuffle, "dst").persist()
-    e.count()
-    try:
-        for t in range(1, max_t + 1):
-            regs = _superstep(e, regs, reg_cols)
-            cur = regs.select("vertex", _estimate(m, reg_cols).alias("cur"))
-            state = (
-                state.join(cur, "vertex")
-                .select(
-                    "vertex",
-                    F.col("cur").alias("prev"),
-                    (F.col("hc") + (F.col("cur") - F.col("prev")) / F.lit(float(t)))
-                    .alias("hc"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        e.unpersist()
-    return state.select("vertex", F.round("hc", 4).alias("hc"))
+    return _harmonic(edges, verts, max_t, p, packed=False)
 
 
 def harmonic_centrality_packed(
@@ -252,50 +279,7 @@ def harmonic_centrality_packed(
     association order matches the column sum bit-for-bit), so at equal p
     it is hash-identical and runs under the SAME oracle; at p=10+ it is
     the web-scale-precision path the column layout cannot reach."""
-    m = 1 << p
-    spark = edges.sparkSession
-    p_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    regs = _init_regs_packed(verts, p, num_partitions=p_shuffle)
-    est = _estimate_packed(m)
-    state = regs.select(
-        "vertex", est.alias("prev"), F.lit(0.0).alias("hc")
-    ).localCheckpoint(eager=True)
-    csr_t = build_transposed_csr(edges, verts, p_shuffle).persist()
-    csr_t.count()
-    try:
-        for t in range(1, max_t + 1):
-            regs = _superstep_packed(csr_t, regs, m)
-            cur = regs.select("vertex", est.alias("cur"))
-            state = (
-                state.join(cur, "vertex")
-                .select(
-                    "vertex",
-                    F.col("cur").alias("prev"),
-                    (
-                        F.col("hc")
-                        + (F.col("cur") - F.col("prev")) / F.lit(float(t))
-                    ).alias("hc"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    finally:
-        csr_t.unpersist()
-    return state.select("vertex", F.round("hc", 4).alias("hc"))
-
-
-def _nf_of(regs: DataFrame, m: int, reg_cols: list[str]) -> float:
-    return _nf_of_expr(regs, _estimate(m, reg_cols))
-
-
-def _nf_of_expr(regs: DataFrame, est) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    # coalesce: SUM over an empty register frame (empty graph) is NULL
-    row = regs.agg(F.coalesce(F.sum(est), F.lit(0.0)).alias("nf")).collect()[0]
-    # HALF_UP to match DuckDB's ROUND (python round() is banker's)
-    return float(
-        Decimal(repr(float(row.nf))).quantize(Decimal("0.0001"), ROUND_HALF_UP)
-    )
+    return _harmonic(edges, verts, max_t, p, packed=True)
 
 
 # --------------------- array-packed register layout ---------------------
@@ -467,13 +451,14 @@ def _scatter_combiner(m: int):
 
 
 def _superstep_packed_plan(csr_t: DataFrame, regs: DataFrame, m: int) -> DataFrame:
-    """One packed superstep on the PageRank-loop discipline: the cached
-    self-looped transposed CSR (dst, srcs) and the register state are
-    co-partitioned (hash(key, P)), the scatter join is a shuffle-hash
-    join of two V-sized frames, the fan-out + map-side partial max run
-    inside Arrow/numpy, and the only other exchange per superstep is the
-    V-sized partial shuffle back to hash(vertex, P) for the final
-    partition-local fold. The self-contribution (v's own ball) rides the
+    """One packed superstep: the cached self-looped transposed CSR (dst,
+    srcs) is hash(dst, P)-partitioned, the scatter join is a shuffle-hash
+    join of two V-sized frames, and the fan-out + map-side partial max
+    run inside Arrow/numpy. A steady-state superstep plans TWO V-sized
+    exchanges (tests/test_superstep.py): the register state into the join
+    — the mapInArrow fold's output does not carry a known hash(vertex, P)
+    partitioning — and the partial shuffle back to hash(vertex, P) for the
+    final partition-local fold. The self-contribution (v's own ball) rides the
     CSR's self-loop rows — NOT a union branch: a union whose self branch
     shares the regs frame's LogicalRDD with the join input trips a
     Catalyst mapInArrow binding bug (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND),
@@ -486,10 +471,6 @@ def _superstep_packed_plan(csr_t: DataFrame, regs: DataFrame, m: int) -> DataFra
     schema = "vertex long, regs array<tinyint>"
     partials = joined.mapInArrow(_scatter_combiner(m), schema)
     return partials.repartition("vertex").mapInArrow(_packed_combiner(m), schema)
-
-
-def _superstep_packed(csr_t: DataFrame, regs: DataFrame, m: int) -> DataFrame:
-    return _superstep_packed_plan(csr_t, regs, m).localCheckpoint(eager=True)
 
 
 def build_transposed_csr(
@@ -557,22 +538,7 @@ def hyperball_packed(
     frame stops being sensible). Estimates are identical to ``hyperball``
     at equal p (same hash, same registers, same fold order), so the gate
     runs it under the SAME oracle."""
-    m = 1 << p
-    spark = edges.sparkSession
-    p_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    regs = _init_regs_packed(verts, p, num_partitions=p_shuffle)
-    rows = [(0, _nf_of_expr(regs, _estimate_packed(m)))]
-    # loop-invariant transposed CSR, hash-partitioned by dst ONCE and
-    # cached — the scatter join is V-sized on both sides every superstep
-    csr_t = build_transposed_csr(edges, verts, p_shuffle).persist()
-    csr_t.count()
-    try:
-        for t in range(1, max_t + 1):
-            regs = _superstep_packed(csr_t, regs, m)
-            rows.append((t, _nf_of_expr(regs, _estimate_packed(m))))
-    finally:
-        csr_t.unpersist()
-    return spark.createDataFrame(rows, "t int, nf_est double")
+    return _nf_rows(edges, verts, max_t, p, packed=True)
 
 
 def effective_diameter(
@@ -604,8 +570,6 @@ def effective_diameter(
                 prev = rows[t - 1][1]
                 d = (t - 1) + (target - prev) / (nf - prev)
             break
-    from decimal import ROUND_HALF_UP, Decimal
-
     d6 = float(Decimal(repr(d)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
     return spark.createDataFrame([(q, d6)], "q double, d_eff double")
 
@@ -620,36 +584,19 @@ def harmonic_centrality_exact(
     per-community subgraphs), the exact/approx pairing the NF family
     already has (neighborhood_function_exact vs hyperball).
 
-    Same level-synchronous pair expansion as neighborhood_function_exact
-    but carrying the level at which a (v, u) pair FIRST appears — the
-    exact directed distance (an anti join per level instead of the pair-
-    set dropDuplicates). The 1/d terms are small-denominator rationals
+    The same per-source ball expansion as neighborhood_function_exact:
+    the level at which a (v, u) pair FIRST appears is the exact directed
+    distance d(v→u). The 1/d terms are small-denominator rationals
     (1, 1/2, 1/3 … — sums land exactly on decimal half-grids), so the
     per-vertex sum folds in sorted source order from 0.0 on both engines
     (the betweenness discipline) and rounds bit-stably."""
-    dist = verts.select(
-        F.col("vertex").alias("v"), F.col("vertex").alias("u"), F.lit(0).alias("d")
-    ).localCheckpoint(eager=True)
-    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("nu"))
-    for t in range(1, max_t + 1):
-        frontier = dist.where(F.col("d") == t - 1)
-        new = (
-            frontier.join(e, "u")
-            .select("v", F.col("nu").alias("u"))
-            .dropDuplicates(["v", "u"])
-            .join(dist.select("v", "u"), ["v", "u"], "left_anti")
-            .select("v", "u", F.lit(t).alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        if new.isEmpty():
-            break
-        dist = dist.unionByName(new).localCheckpoint(eager=True)
     hc = (
-        dist.where(F.col("d") >= 1)
+        _balls_of_every_vertex(edges, verts, max_t)
+        .where(F.col("dist") >= 1)
         .select(
-            "u",
+            F.col("vertex").alias("u"),
             F.struct(
-                F.col("v"), (F.lit(1.0) / F.col("d").cast("double")).alias("t")
+                F.col("v"), (F.lit(1.0) / F.col("dist").cast("double")).alias("t")
             ).alias("vt"),
         )
         .groupBy("u")

@@ -25,6 +25,10 @@ next superstep. Both scatter-join sides then satisfy the join's required
 distribution and the shuffle_hash hint (build = V-sized scores) removes
 the SortMergeJoin sorts, so a superstep plans exactly ONE exchange: the
 gather (tests/test_superstep.py asserts the counts).
+
+``cache_scope`` is the one cache mechanism of the loop kernels: HyperBall
+and label propagation use it alone, ``kernel_scope`` adds the coalescing
+suspension the scatter–gather kernels need.
 """
 
 from __future__ import annotations
@@ -38,33 +42,43 @@ COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
 
 
 @contextmanager
-def kernel_scope(spark, release_caches: list | None = None):
-    """Suspend AQE partition coalescing and yield ``cache(df)``, which
-    persists ``df`` and registers it. On exit — failure included — the
-    flag is restored and the registered frames are unpersisted. A plan
-    probe passes ``release_caches`` to receive them instead: cache
+def cache_scope(release_caches: list | None = None):
+    """Yield ``cache(df)``, which persists ``df`` and registers it. On
+    exit — failure included — the registered frames are unpersisted. A
+    plan probe passes ``release_caches`` to receive them instead: cache
     substitution happens at planning time, so the frames must outlive the
     caller's plan inspection (the caller unpersists them afterwards)."""
-    prev = spark.conf.get(COALESCE, "true")
     held: list[DataFrame] = []
 
     def cache(df: DataFrame) -> DataFrame:
         held.append(df.persist())
         return held[-1]
 
-    spark.conf.set(COALESCE, "false")
     try:
         yield cache
     except BaseException:
         release_caches = None
         raise
     finally:
-        spark.conf.set(COALESCE, prev)
         if release_caches is None:
             for df in held:
                 df.unpersist()
         else:
             release_caches.extend(held)
+
+
+@contextmanager
+def kernel_scope(spark, release_caches: list | None = None):
+    """``cache_scope`` with AQE partition coalescing suspended, so the
+    gather's groupBy keeps the P-way partitioning the next scatter join
+    relies on; the flag is restored on exit, failure included."""
+    prev = spark.conf.get(COALESCE, "true")
+    spark.conf.set(COALESCE, "false")
+    try:
+        with cache_scope(release_caches) as cache:
+            yield cache
+    finally:
+        spark.conf.set(COALESCE, prev)
 
 
 def build_csr(
