@@ -11,6 +11,7 @@ exactly.
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -29,6 +30,9 @@ from webgraph_ans_rs_spark.sources.bvgraph import (
 )
 
 CNR_PROPS = "/root/reference/tests/data/cnr-2000/cnr-2000.properties"
+requires_cnr2000 = pytest.mark.skipif(
+    not os.path.exists(CNR_PROPS), reason="cnr-2000 BVGraph files not present"
+)
 
 
 def test_code_roundtrips():
@@ -96,6 +100,7 @@ def test_graph_roundtrip_no_window_no_intervals():
     assert decode_bvgraph(data, props) == lists
 
 
+@requires_cnr2000
 def test_cnr2000_counts_match_properties():
     """Decode the artifact WebGraph encoded; node/arc counts must equal
     the published .properties exactly (ensure_cnr2000 raises otherwise —
@@ -106,6 +111,7 @@ def test_cnr2000_counts_match_properties():
     assert meta["arcs"] == props.arcs == 3216152
 
 
+@requires_cnr2000
 def test_cnr2000_edge_table_in_spark(spark):
     path, meta = ensure_cnr2000()
     edges = spark.read.parquet(path)
@@ -128,6 +134,7 @@ def _induced_subgraph_lists(limit: int) -> list[list[int]]:
     return [sorted(x) for x in lists]
 
 
+@requires_cnr2000
 def test_cnr2000_scc_matches_tarjan_on_induced_subgraph(spark):
     """SCC on the induced subgraph of the first 2000 REAL cnr-2000 nodes
     vs the pure-Python Tarjan oracle."""
@@ -222,6 +229,7 @@ def test_cnr2000_full_scc_matches_tarjan(spark):
     assert got_sizes == want_sizes
 
 
+@requires_cnr2000
 def test_cnr2000_hyperball_tracks_exact_on_induced_subgraph(spark):
     """HyperBall (packed, p=10) on a real web subgraph vs exact NF."""
     from webgraph_ans_rs_spark.operators.neighborhood import (

@@ -36,6 +36,19 @@ def test_parse_html_malformed():
     t, l = parse_html(b'<p>a<a href="x">y</a>b</p><a href="z">')
     assert t == "ab" and l == ["x", "z"]
     assert parse_html(b"\xff\xfe<p>ok</p>")[0] == "ok"
+    # markup outside the tokenizer's grammar, parsed by html.parser
+    assert parse_html(b"<p>a&amp;b &#38; c & d</p>") == ("a&b & c & d", [])
+    assert parse_html(b"<p>x<!-- <p>c</p> -->y</p>") == ("xy", [])
+    assert parse_html(b'<p><script>"</p>"</script>s</p><style>p{}</style>') == ('"</p>"s', [])
+    assert parse_html(b'<a href="x&amp;y&#38;z">') == ("", ["x&y&z"])
+    assert parse_html(b"<a href='q' href=u\thref=\"t\">") == ("", ["q", "u", "t"])
+    assert parse_html(b"<p>1 < 2</p >") == ("1 < 2", [])
+    assert parse_html(b"<p/>a</p>") == ("", [])
+    assert parse_html(b'<p>t<a href="x') == ("", [])
+    # inside it
+    assert parse_html(b'<a href>x</a><a href="">y</a>') == ("", [""])
+    assert parse_html(b'<A HREF="U" href="v">') == ("", ["U", "v"])
+    assert parse_html(b'<p><p>in</p>out</p><a><a href="n">a</a>b</a>') == ("inout", ["n"])
 
 
 def test_extract_udf_byte_identical(spark):

@@ -3,8 +3,27 @@
 Contract (BASELINE.json input_hint): byte-identical extracted text per url,
 vectorized pandas/Arrow UDFs only — no per-row Python UDFs in the hot path.
 
-The parser is dependency-free (stdlib ``html.parser``), versioned by
-EXTRACTOR_VERSION, and locale-independent, so the same bytes come out on
+The extraction rules live once, in ``_PageParser``'s handlers, an stdlib
+``html.parser`` subclass. Two tokenizers feed them:
+
+  * ``_TOKEN``, one compiled regex run once per page (``findall``), for pages
+    inside a strict grammar: text holding no ``<`` or ``&``; start tags
+    ``<name( attr(="value")?)*>`` with single-space-separated attributes and
+    double-quoted values holding no ``<``, ``>``, ``&`` or ``"``; end tags
+    ``</name>``; no raw-text element (``script``, ``style``). Generated
+    pages are all of this shape.
+  * ``html.parser`` itself (``feed``/``close``), the reference path, for a
+    page with any other token: comment, declaration, processing
+    instruction, raw-text element, bare ``<`` or ``&``, self-closing ``/>``,
+    other whitespace or quoting, truncated markup.
+
+On the grammar, ``html.parser`` calls the same handlers with the same
+arguments: it lower-cases tag and attribute names, strips the quotes,
+has no character reference to convert, and delivers the text between tags
+as data. So both paths give the same (text, outlinks) for every page
+(tests/test_extract_parse.py holds them equal), and EXTRACTOR_VERSION, which
+versions the output and not the code path, is the same for both. The parse
+is dependency-free and locale-independent, so the same bytes come out on
 every executor, Python build, and cluster size (SURVEY.md §7 hard part (a)).
 
 Semantics:
@@ -21,6 +40,7 @@ parse is embarrassingly parallel, no shuffle.
 
 from __future__ import annotations
 
+import re
 from html.parser import HTMLParser
 
 import pandas as pd
@@ -36,6 +56,21 @@ EXTRACT_SCHEMA = StructType(
         StructField("outlinks", ArrayType(StringType())),
     ]
 )
+
+# One alternative per token kind. The last one takes the rest of the page
+# from the first "<" or "&" that starts no in-grammar tag: such a page goes
+# to html.parser whole. No quantifier nests an ambiguous one, so findall
+# runs in linear time on any input.
+_TOKEN = re.compile(
+    r"([^<&]+)"  # text
+    r'|<([a-zA-Z][a-zA-Z0-9]*)((?: [a-zA-Z][-a-zA-Z0-9]*(?:="[^<>&"]*")?)*)>'  # start tag
+    r"|</([a-zA-Z][a-zA-Z0-9]*)>"  # end tag
+    r"|[<&].*",  # anything else, to the end of the page
+    re.DOTALL,
+)
+_ATTR = re.compile(r' ([a-zA-Z][-a-zA-Z0-9]*)(?:(=)"([^"]*)")?')
+# html.parser reads these elements' content as raw text, not as markup.
+_RAW_TEXT = frozenset(HTMLParser.CDATA_CONTENT_ELEMENTS)
 
 
 class _PageParser(HTMLParser):
@@ -72,12 +107,41 @@ class _PageParser(HTMLParser):
             self._buf.append(data)
 
 
+def _feed_tokens(parser: _PageParser, doc: str) -> bool:
+    """Tokenize ``doc`` with ``_TOKEN`` and call ``parser``'s handlers as
+    html.parser would. Returns False, with ``parser`` fed part of the page,
+    at the first token outside the grammar (see the module docstring)."""
+    for text, tag, attrs, end in _TOKEN.findall(doc):
+        if text:
+            parser.handle_data(text)
+        elif tag:
+            tag = tag.lower()
+            if tag in _RAW_TEXT:
+                return False
+            parser.handle_starttag(
+                tag, [(k.lower(), v if eq else None) for k, eq, v in _ATTR.findall(attrs)]
+            )
+        elif end:
+            parser.handle_endtag(end.lower())
+        else:
+            return False
+    return True
+
+
 def parse_html(html: bytes) -> tuple[str, list[str]]:
     """Pure function: html bytes → (text, outlinks). Malformed input never
-    raises — html.parser is tolerant; undecodable bytes are replaced."""
+    raises; undecodable bytes are replaced.
+
+    An in-grammar page is tokenized by ``_feed_tokens``. Any other page is
+    parsed from the start by a fresh ``_PageParser.feed``, the reference
+    path, which tolerates any input. Either way the output is the one
+    html.parser gives."""
+    doc = html.decode("utf-8", errors="replace")
     parser = _PageParser()
-    parser.feed(html.decode("utf-8", errors="replace"))
-    parser.close()
+    if not _feed_tokens(parser, doc):
+        parser = _PageParser()
+        parser.feed(doc)
+        parser.close()
     return "\n".join(parser.paragraphs), parser.outlinks
 
 
