@@ -356,7 +356,7 @@ def main() -> None:
             )
             t0 = time.time()
             n_bp_arcs = (
-                decode_refs_bitpacked(bp, window=bp_w)
+                decode_refs_bitpacked(bp)
                 .agg(F.coalesce(F.sum(F.size("dsts")), F.lit(0)))
                 .first()[0]
             )
@@ -378,7 +378,7 @@ def main() -> None:
 
                 t0 = time.time()
                 n_hits = sum(
-                    successors_from_bitpacked(bp, u, window=bp_w).count()
+                    successors_from_bitpacked(bp, u).count()
                     for u in pr_probes
                 )
                 row["point_read_ms_per_probe"] = round(
@@ -395,9 +395,7 @@ def main() -> None:
                     ).alias("vertex")
                 ).distinct()
                 t0 = time.time()
-                successors_from_bitpacked_batch(
-                    bp, bp_probes, window=bp_w
-                ).count()
+                successors_from_bitpacked_batch(bp, bp_probes).count()
                 row["batch_1000_sec"] = round(time.time() - t0, 3)
             storage["cnr2000"]["layouts"][f"{bp_name}-zstd"] = row
             bp.unpersist()

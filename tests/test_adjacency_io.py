@@ -7,11 +7,6 @@ from webgraph_ans_rs_spark.operators.graph_build import (
     build_csr_adjacency,
     write_adjacency_table,
 )
-from webgraph_ans_rs_spark.operators.triangles import (
-    oriented_edges,
-    triangle_count,
-    triangle_count_csr,
-)
 
 
 def test_write_load_roundtrip(spark, tmp_path):
@@ -27,11 +22,3 @@ def test_write_load_roundtrip(spark, tmp_path):
     # point lookup pushes the filter into the scan
     plan = loaded.where(F.col("src") == 5)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" not in plan or "src" in plan
-
-
-def test_triangle_count_csr_matches_join_variant(spark):
-    edges, verts, es, n = seeded_random_graph(spark, n=60, m=300)
-    want = triangle_count(edges).first().n_triangles
-    adj = build_csr_adjacency(oriented_edges(edges).withColumnRenamed("a", "src").withColumnRenamed("b", "dst"))
-    got = triangle_count_csr(adj).first().n_triangles
-    assert got == want

@@ -50,17 +50,33 @@ def test_bitpack_chunk_reset_roundtrip(spark):
 
 def test_bitpack_copy_heavy_lists(spark):
     """Near-identical consecutive lists (the BV copy case) round-trip
-    with blocks + implicit trailing runs exercised."""
+    with blocks + implicit trailing runs exercised. Lists 30-39 repeat
+    lists 20-29: under the window-16, unbounded-chain config they copy
+    from 10 rows back, beyond the default window of 7, and every decoder
+    resolves them with its default arguments."""
+    from webgraph_ans_rs_spark.operators.bitpack import (
+        successors_from_bitpacked_batch,
+    )
+
     base = list(range(0, 40, 2))
     rows = []
     for s in range(20):
         dsts = sorted(set(base + [s * 3 + 1]) - {s * 2})
         rows.append((s, dsts))
+    for s in range(20, 40):
+        rows.append((s, [1000 + 100 * (s % 10) + j for j in range(0, 20, 2)]
+                     + [2000 + s]))
+    want = dict(rows)
     adj = spark.createDataFrame(rows, "src long, dsts array<long>")
-    packed = encode_refs_bitpacked(adj, num_buckets=1)
-    assert _adj_map(decode_refs_bitpacked(packed)) == dict(
-        (s, d) for s, d in rows
-    )
+    probes = spark.createDataFrame([(5,), (35,), (99,)], "vertex long")
+    for config in ({}, dict(window=16, max_ref=2_000_000_000)):
+        packed = encode_refs_bitpacked(adj, num_buckets=1, **config).persist()
+        assert _adj_map(decode_refs_bitpacked(packed)) == want
+        assert _adj_map(successors_from_bitpacked_batch(packed, probes)) == {
+            5: want[5], 35: want[35]
+        }
+        assert _adj_map(successors_from_bitpacked(packed, 35)) == {35: want[35]}
+        packed.unpersist()
 
 
 def test_bitpack_hashed_full_range_ids(spark):
@@ -132,10 +148,9 @@ def test_bitpack_batch_random_access(spark):
 
 
 def test_component_bits_account_for_every_payload_bit(spark):
-    """The per-component breakdown mirrors _pack_pdf's write sequence —
-    summed component bits must equal the packed payload bits exactly, up
-    to the <8-bit byte padding per chunk (so the counter can never drift
-    from the writer)."""
+    """The per-component breakdown counts the field sequence _pack_pdf
+    writes — summed component bits must equal the packed payload bits
+    exactly, up to the <8-bit byte padding per chunk."""
     from webgraph_ans_rs_spark.operators.bitpack import refs_component_bits
 
     edges, _, _, _ = seeded_random_graph(spark, n=300, m=1500)
@@ -193,17 +208,52 @@ GOLDEN_PACKED = {
 }
 
 
-@pytest.mark.parametrize("config", sorted(PACK_CONFIGS))
-@pytest.mark.parametrize("graph", ["weblike", "hashed"])
-def test_bitpack_golden_payload_bytes(spark, graph, config):
+# refs_component_bits of the same graphs and configs, exactly (the sum of
+# the components is also checked against the payload, to within padding,
+# by test_component_bits_account_for_every_payload_bit)
+_COMPONENT_KEYS = (
+    "src_deltas", "ref_offsets", "blocks", "res_counts", "residuals",
+    "n_lists", "n_residuals",
+)
+GOLDEN_COMPONENT_BITS = {
+    key: dict(zip(_COMPONENT_KEYS, values))
+    for key, values in {
+        ("weblike", "w7_r3"): (1527, 2333, 3235, 7007, 39485, 1473, 6169),
+        ("weblike", "w16_unbounded"): (1527, 2351, 3319, 6983, 39234, 1473, 6122),
+        ("weblike", "chunk16"): (1523, 2285, 3033, 7067, 40114, 1473, 6277),
+        ("hashed", "w7_r3"): (154561, 1485, 29, 8021, 667558, 1473, 8078),
+        ("hashed", "w16_unbounded"): (154561, 1541, 68, 8003, 664858, 1473, 8045),
+        ("hashed", "chunk16"): (145203, 1485, 29, 8021, 667558, 1473, 8078),
+    }.items()
+}
+
+
+def _golden_adj(spark, graph):
     edges = weblike_edges(spark)
     if graph == "hashed":
         edges = hashed_ids(edges)
+    return build_csr_adjacency(edges)
+
+
+@pytest.mark.parametrize("config", sorted(PACK_CONFIGS))
+@pytest.mark.parametrize("graph", ["weblike", "hashed"])
+def test_bitpack_golden_payload_bytes(spark, graph, config):
     packed = encode_refs_bitpacked(
-        build_csr_adjacency(edges), num_buckets=4, **PACK_CONFIGS[config]
+        _golden_adj(spark, graph), num_buckets=4, **PACK_CONFIGS[config]
     )
     h = hashlib.sha256()
     for r in sorted(packed.collect(), key=lambda r: (r.bucket, r.chunk)):
         h.update(repr((r.bucket, r.chunk, r.first_src, r.last_src, r.n_rows)).encode())
         h.update(bytes(r.payload))
     assert h.hexdigest() == GOLDEN_PACKED[graph, config]
+
+
+@pytest.mark.parametrize("config", sorted(PACK_CONFIGS))
+@pytest.mark.parametrize("graph", ["weblike", "hashed"])
+def test_component_bits_golden(spark, graph, config):
+    from webgraph_ans_rs_spark.operators.bitpack import refs_component_bits
+
+    comp = refs_component_bits(
+        _golden_adj(spark, graph), num_buckets=4, **PACK_CONFIGS[config]
+    )
+    assert comp == GOLDEN_COMPONENT_BITS[graph, config]

@@ -87,7 +87,7 @@ def test_encode_rows_roundtrip_full_range(rows, window, max_ref):
         assert cur.tolist() == want.tolist()
 
 
-@given(_graph_strategy(), st.integers(min_value=1, max_value=5),
+@given(_graph_strategy(), st.integers(min_value=1, max_value=16),
        st.integers(min_value=1, max_value=8))
 @settings(max_examples=40, deadline=None)
 def test_bitpack_chunks_roundtrip_full_range(rows, window, chunk):
@@ -107,8 +107,7 @@ def test_bitpack_chunks_roundtrip_full_range(rows, window, chunk):
     got = []
     for _, r in packed.iterrows():
         for src, cur in _unpack_chunk(
-            int(r["first_src"]), int(r["n_rows"]), bytes(r["payload"]),
-            window, 3,
+            int(r["first_src"]), int(r["n_rows"]), bytes(r["payload"]), 3
         ):
             got.append((src, [int(x) for x in cur]))
     assert got == [(s, list(d)) for s, d in rows]

@@ -6,9 +6,10 @@ instantaneous γ/ζ codes). This tool measures that boundary on our own
 layout, on the reference's golden graph, BEFORE we commit to an
 implementation — the interval-codec adopt-or-reject protocol.
 
-Method: re-run the exact _pack_pdf field sequence, but instead of writing
-γ/ζ codes, fold each value into the symbol alphabet a static ANS would
-code:
+Method: consume the bit-packed payload's field sequence
+(``bitpack._payload_fields``, the one _pack_pdf writes), but instead of
+writing γ/ζ codes, fold each value into the symbol alphabet a static ANS
+would code:
 
     sym(v) = v                     if v < DIRECT   (coded by the model)
     sym(v) = DIRECT + (bl - b0)    else            (escape bucket per bit
@@ -36,11 +37,14 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from webgraph_ans_rs_spark.operators.bitpack import (  # noqa: E402
+    FIELDS as COMPONENTS,
+    _payload_fields,
+)
+
 DIRECT = int(os.environ.get("ANS_DIRECT", "256"))  # model symbols below; escape per bit length above
 _B0 = DIRECT.bit_length()  # escape buckets start at this bit length
 
-COMPONENTS = ("src_deltas", "ref_offsets", "blocks", "res_counts",
-              "residuals_first", "residuals_rest")
 # refs_component_bits reports residuals combined — map both splits onto it
 _CURRENT_KEY = {"residuals_first": "residuals", "residuals_rest": "residuals"}
 
@@ -54,49 +58,21 @@ def fold(v: int) -> tuple[int, int]:
 
 
 def _hist_pdf(pdf, window: int, max_ref: int, chunk: int):
-    """Per-bucket (component, symbol, count) — mirrors _pack_pdf's field
-    sequence exactly (same values that get γ/ζ-coded)."""
+    """Per-bucket (component, symbol, count): consumes the payload field
+    sequence, so the values are exactly the ones _pack_pdf γ/ζ-codes. The
+    zigzag first residual keeps its own context (a different distribution
+    from the sorted-diff rest)."""
     import pandas as pd
 
-    from webgraph_ans_rs_spark.operators.bitpack import _M64, _to_i64
-    from webgraph_ans_rs_spark.operators.refcodec import _encode_rows
-    from webgraph_ans_rs_spark.sources.bvgraph import int2nat
-
     pdf = pdf.sort_values("src")
-    rows = _encode_rows(
-        pdf["src"].tolist(), pdf["dsts"].to_numpy(), window, max_ref,
-        reset_every=chunk,
-    )
     hists: dict[str, Counter] = {c: Counter() for c in COMPONENTS}
     raw_bits = Counter()  # escape mantissas per component
-    prev = 0
-    n_in_chunk = 0
-    for i, (src, off, _rs, blocks, gaps, _cur, _root) in enumerate(rows):
-        if i % chunk == 0:
-            prev = src
-            n_in_chunk = 0
-
-        def add(comp, v):
-            s, rb = fold(v)
-            hists[comp][s] += 1
-            raw_bits[comp] += rb
-
-        add("src_deltas", src - prev - (1 if n_in_chunk else 0))
-        prev = src
-        n_in_chunk += 1
-        add("ref_offsets", off)
-        if off:
-            add("blocks", len(blocks))
-            for j, b in enumerate(blocks):
-                add("blocks", b if j == 0 else b - 1)
-        add("res_counts", len(gaps))
-        for j, g in enumerate(gaps):
-            if j == 0:
-                # first gap is zigzag-folded — its own context (different
-                # distribution from the sorted-diff rest)
-                add("residuals_first", int2nat(_to_i64(int(g))))
-            else:
-                add("residuals_rest", (int(g) & _M64) - 1)
+    for _c, field, v, _k in _payload_fields(
+        pdf["src"].tolist(), pdf["dsts"].to_numpy(), window, max_ref, 3, chunk  # ζ_3: unused here
+    ):
+        s, rb = fold(v)
+        hists[field][s] += 1
+        raw_bits[field] += rb
     out = [
         (c, int(s), int(n)) for c in COMPONENTS for s, n in hists[c].items()
     ]
@@ -115,6 +91,7 @@ def main() -> None:
 
     from webgraph_ans_rs_spark.operators.bitpack import refs_component_bits
     from webgraph_ans_rs_spark.operators.graph_build import build_csr_adjacency
+    from webgraph_ans_rs_spark.operators.refcodec import _range_buckets
     from webgraph_ans_rs_spark.session import get_spark
     from webgraph_ans_rs_spark.sources.bvgraph import ensure_cnr2000
 
@@ -132,16 +109,8 @@ def main() -> None:
     )
 
     # folded-symbol histograms (same bucketing so the streams match)
-    mn, mx = adj.agg(F.min("src"), F.max("src")).first()
-    span = max(1, (int(mx) - int(mn)) // 8 + 1)
-    off = F.col("src").cast("decimal(38,0)") - F.lit(int(mn)).cast("decimal(38,0)")
-    with_bkt = adj.select(
-        F.floor(off / F.lit(span).cast("decimal(38,0)")).cast("int").alias("_bkt"),
-        "src",
-        "dsts",
-    )
     hist_rows = (
-        with_bkt.groupBy("_bkt")
+        _range_buckets(adj, 8)
         .applyInPandas(
             lambda pdf: _hist_pdf(pdf, window, max_ref, chunk),
             "component string, symbol long, count long",

@@ -82,19 +82,6 @@ def main():
             lambda: wedges.join(e3, ["a", "c"]).agg(F.count("*")).first(),
             out,
         )
-        # CSR array_intersect variant on the oriented edges
-        adj = e.groupBy(F.col("a").alias("src")).agg(
-            F.collect_list("b").alias("dsts")
-        )
-        adj = timed(spark, "csr_build+persist", lambda: _persist(adj), out)
-        from webgraph_ans_rs_spark.operators.triangles import triangle_count_csr
-
-        timed(
-            spark,
-            "triangle_count_csr",
-            lambda: print("   csr tri:", triangle_count_csr(adj).first()),
-            out,
-        )
 
     elif kernel == "trans_total":
         from webgraph_ans_rs_spark.operators.triangles import transitivity

@@ -31,13 +31,19 @@ outdegree, which n_res + the referenced list reconstruct):
   if n_res > 0:
       zeta_k(int2nat(first_gap)), zeta_k(gap - 1) ...
 
+``_payload_fields`` is the one place that sequence is spelled out; the
+packer, the per-component bit counter and the ANS histogram tool all
+consume it.
+
 The window RESETS at every chunk boundary (``_encode_rows`` with
 ``reset_every=chunk``), so every chunk decodes independently: decode is
 an embarrassingly-parallel mapInPandas with NO shuffle, and random
 access prunes to exactly ONE chunk row via (first_src <= u <= last_src)
 — range bucketing makes chunk src-ranges globally disjoint. The
 compression loss vs an unbroken window is <= window/chunk of rows
-losing their candidates (~0.7% at window=7, chunk=1024).
+losing their candidates (~0.7% at window=7, chunk=1024). The decoders
+take only ``zeta_k``: a reference never leaves its chunk, so it resolves
+against the lists already decoded, whatever window the encoder used.
 
 Python does the bit fiddling because Spark/parquet genuinely cannot
 express sub-byte codes; it runs ONCE at ingest (applyInPandas per
@@ -59,7 +65,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.bvgraph import BitReader, BitWriter, int2nat, nat2int
-from .refcodec import _apply_blocks, _encode_rows, _range_buckets
+from .refcodec import _encode_rows, _range_buckets, _rebuild_list
 
 PACK_SCHEMA = (
     "bucket int, chunk int, first_src long, last_src long, n_rows int,"
@@ -74,68 +80,67 @@ def _to_i64(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
+# the payload's fields in write order (see the module doc); the residuals
+# split into the zigzag first one and the gap-1 rest
+FIELDS = (
+    "src_deltas", "ref_offsets", "blocks", "res_counts",
+    "residuals_first", "residuals_rest",
+)
+
+
+def _payload_fields(srcs, dsts, window: int, max_ref: int, zeta_k: int,
+                    chunk: int):
+    """The payload of one bucket (``srcs`` sorted) as ``(chunk index,
+    field, value, k)`` in write order: the one definition of the layout in
+    the module doc. ``_pack_pdf`` writes it, ``_component_bits_pdf`` counts
+    it and ``tools/ans_experiment.py`` folds it into histograms. ``value``
+    is the natural number coded with ζ_k: k = ``zeta_k`` for residuals and
+    k = 1 for every other field, because ζ_1 is γ bit for bit."""
+    rows = _encode_rows(srcs, dsts, window, max_ref, reset_every=chunk)
+    prev = 0
+    for i, (src, off, _rs, blocks, gaps, _cur, _root) in enumerate(rows):
+        c = i // chunk
+        yield c, "src_deltas", src - prev - 1 if i % chunk else 0, 1
+        prev = src
+        yield c, "ref_offsets", off, 1
+        if off:
+            yield c, "blocks", len(blocks), 1
+            for j, b in enumerate(blocks):
+                yield c, "blocks", b if j == 0 else b - 1, 1
+        gaps = gaps.tolist()
+        yield c, "res_counts", len(gaps), 1
+        if gaps:
+            yield c, "residuals_first", int2nat(gaps[0]), zeta_k
+        # later gaps are diffs of SORTED int64s: >= 1 in unsigned mod-2^64
+        # semantics, but the int64 column wraps negative past 2^63 — code
+        # the unsigned value
+        for g in gaps[1:]:
+            yield c, "residuals_rest", (g & _M64) - 1, zeta_k
+
+
 def _pack_pdf(pdf, window: int, max_ref: int, zeta_k: int, chunk: int):
     import pandas as pd
 
     pdf = pdf.sort_values("src")
     bkt = int(pdf["_bkt"].iloc[0]) if len(pdf) else 0
     srcs = pdf["src"].tolist()
-    rows = _encode_rows(
-        srcs, pdf["dsts"].to_numpy(), window, max_ref, reset_every=chunk
-    )
-    o_chunk, o_first, o_last, o_n, o_payload = [], [], [], [], []
-    w = None
-    prev = first = last = 0
-    n_in_chunk = 0
-
-    def flush():
-        if w is not None and n_in_chunk:
-            o_chunk.append(len(o_chunk))
-            o_first.append(first)
-            o_last.append(last)
-            o_n.append(n_in_chunk)
-            o_payload.append(w.getvalue())
-
-    for i, (src, off, _rs, blocks, gaps, _cur, _root) in enumerate(rows):
-        if i % chunk == 0:
-            flush()
-            w = BitWriter()
-            first = prev = src
-            n_in_chunk = 0
-        w.write_gamma(src - prev - (1 if n_in_chunk else 0))
-        prev = last = src
-        n_in_chunk += 1
-        w.write_gamma(off)
-        if off:
-            w.write_gamma(len(blocks))
-            for j, b in enumerate(blocks):
-                w.write_gamma(b if j == 0 else b - 1)
-        w.write_gamma(len(gaps))
-        for j, g in enumerate(gaps):
-            if j == 0:
-                w.write_zeta(int2nat(_to_i64(int(g))), zeta_k)
-            else:
-                # subsequent gaps are diffs of SORTED int64s: >= 1 in
-                # unsigned mod-2^64 semantics, but the int64 column wraps
-                # negative past 2^63 — code the unsigned value
-                w.write_zeta((int(g) & _M64) - 1, zeta_k)
-    flush()
+    n = len(srcs)
+    starts = range(0, n, chunk)
+    writers = [BitWriter() for _ in starts]
+    for c, _field, v, k in _payload_fields(
+        srcs, pdf["dsts"].to_numpy(), window, max_ref, zeta_k, chunk
+    ):
+        writers[c].write_zeta(v, k)
     return pd.DataFrame(
         {
-            "bucket": [bkt] * len(o_chunk),
-            "chunk": o_chunk,
-            "first_src": o_first,
-            "last_src": o_last,
-            "n_rows": o_n,
-            "payload": o_payload,
+            "bucket": [bkt] * len(writers),
+            "chunk": list(range(len(writers))),
+            "first_src": [srcs[s] for s in starts],
+            "last_src": [srcs[min(s + chunk, n) - 1] for s in starts],
+            "n_rows": [min(chunk, n - s) for s in starts],
+            "payload": [w.getvalue() for w in writers],
         }
     )
-
-
-def _gamma_bits(v: int) -> int:
-    """Code length of write_gamma(v): unary exponent + mantissa."""
-    n = (v + 1).bit_length()
-    return 2 * n - 1
 
 
 def _zeta_bits(v: int, k: int) -> int:
@@ -151,60 +156,39 @@ COMPONENT_BITS_SCHEMA = (
     " res_counts long, residuals long, n_lists long, n_residuals long"
 )
 
-# payload field order shared by _pack_pdf (writes) and _component_bits_pdf
-# (counts) — test_bitpack pins counted bits == packed payload bits so the
-# two can never drift
+# the FIELDS refs_component_bits reports, with the two residual fields as one
 _COMPONENTS = ("src_deltas", "ref_offsets", "blocks", "res_counts", "residuals")
 
 
 def _component_bits_pdf(pdf, window: int, max_ref: int, zeta_k: int, chunk: int):
     """Per-bucket bits spent per payload field — the engine's analogue of
     the reference's per-component archive breakdown
-    (/root/reference/percomponent_analysis.py:34-60 reads bitsforblocks/
+    (percomponent_analysis.py:34-60 reads bitsforblocks/
     bitsforintervals/bitsforresiduals/bitsforreferences/bitsforoutdegrees
-    off the .properties). Mirrors _pack_pdf's exact write sequence,
-    summing code lengths instead of emitting bits; our layout has no
-    outdegree field (res_counts + the referenced list reconstruct it) and
-    no interval class (measured and rejected — subsumed by copy blocks +
-    parquet v2), but adds src_deltas (BVGraph node ids are implicit)."""
+    off the .properties). Consumes ``_payload_fields``, summing code
+    lengths instead of emitting bits; our layout has no outdegree field
+    (res_counts + the referenced list reconstruct it) and no interval
+    class (measured and rejected — subsumed by copy blocks + parquet v2),
+    but adds src_deltas (BVGraph node ids are implicit)."""
     import pandas as pd
 
     pdf = pdf.sort_values("src")
     bkt = int(pdf["_bkt"].iloc[0]) if len(pdf) else 0
-    rows = _encode_rows(
-        pdf["src"].tolist(), pdf["dsts"].to_numpy(), window, max_ref,
-        reset_every=chunk,
-    )
-    bits = dict.fromkeys(_COMPONENTS, 0)
-    n_lists = n_res_total = 0
-    prev = 0
-    n_in_chunk = 0
-    for i, (src, off, _rs, blocks, gaps, _cur, _root) in enumerate(rows):
-        if i % chunk == 0:
-            prev = src
-            n_in_chunk = 0
-        bits["src_deltas"] += _gamma_bits(src - prev - (1 if n_in_chunk else 0))
-        prev = src
-        n_in_chunk += 1
-        n_lists += 1
-        bits["ref_offsets"] += _gamma_bits(off)
-        if off:
-            bits["blocks"] += _gamma_bits(len(blocks))
-            for j, b in enumerate(blocks):
-                bits["blocks"] += _gamma_bits(b if j == 0 else b - 1)
-        bits["res_counts"] += _gamma_bits(len(gaps))
-        for j, g in enumerate(gaps):
-            n_res_total += 1
-            if j == 0:
-                bits["residuals"] += _zeta_bits(int2nat(_to_i64(int(g))), zeta_k)
-            else:
-                bits["residuals"] += _zeta_bits((int(g) & _M64) - 1, zeta_k)
+    bits = dict.fromkeys(FIELDS, 0)
+    counts = dict.fromkeys(FIELDS, 0)
+    for _c, field, v, k in _payload_fields(
+        pdf["src"].tolist(), pdf["dsts"].to_numpy(), window, max_ref, zeta_k,
+        chunk,
+    ):
+        bits[field] += _zeta_bits(v, k)
+        counts[field] += 1
+    bits["residuals"] = bits["residuals_first"] + bits["residuals_rest"]
     return pd.DataFrame(
         {
             "bucket": [bkt],
             **{c: [bits[c]] for c in _COMPONENTS},
-            "n_lists": [n_lists],
-            "n_residuals": [n_res_total],
+            "n_lists": [counts["src_deltas"]],
+            "n_residuals": [counts["residuals_first"] + counts["residuals_rest"]],
         }
     )
 
@@ -252,52 +236,28 @@ def encode_refs_bitpacked(
     )
 
 
-def _unpack_chunk(first_src: int, n_rows: int, payload: bytes, window: int,
-                  zeta_k: int):
-    """Decode one self-contained chunk -> list of (src, np.ndarray dsts)."""
-    import numpy as np
-
+def _unpack_chunk(first_src: int, n_rows: int, payload: bytes, zeta_k: int):
+    """Decode one self-contained chunk -> list of (src, np.ndarray dsts).
+    A reference ``off`` lists back lies in the same chunk, so it resolves
+    against the lists already decoded (``out[-off]``)."""
     r = BitReader(payload)
-    win: list = []
     out = []
     src = first_src
     for i in range(n_rows):
-        delta = r.read_gamma()
-        src = first_src + delta if i == 0 else src + delta + 1
+        src += r.read_gamma() + (1 if i else 0)
         off = r.read_gamma()
-        blocks = []
-        if off:
-            nb = r.read_gamma()
-            for j in range(nb):
-                b = r.read_gamma()
-                blocks.append(b if j == 0 else b + 1)
+        blocks = [
+            r.read_gamma() + (1 if j else 0) for j in range(r.read_gamma())
+        ] if off else []
         n_res = r.read_gamma()
-        gaps = np.empty(n_res, dtype=np.int64)
-        for j in range(n_res):
-            if j == 0:
-                gaps[0] = np.int64(_to_i64(nat2int(r.read_zeta(zeta_k))))
-            else:
-                gaps[j] = np.int64(_to_i64(r.read_zeta(zeta_k) + 1))
-        if n_res:
-            with np.errstate(over="ignore"):
-                res = np.cumsum(gaps) + np.int64(_to_i64(src))
-        else:
-            res = gaps
-        if off == 0:
-            cur = res
-        else:
-            copied = _apply_blocks(win[-off], blocks)
-            cur = np.sort(np.concatenate([copied, res]))
-        out.append((src, cur))
-        win.append(cur)
-        if len(win) > window:
-            win.pop(0)
+        gaps = [nat2int(r.read_zeta(zeta_k))] if n_res else []
+        gaps += [_to_i64(r.read_zeta(zeta_k) + 1) for _ in range(n_res - 1)]
+        ref_list = out[-off][1] if off else None
+        out.append((src, _rebuild_list(src, gaps, ref_list, blocks)))
     return out
 
 
-def decode_refs_bitpacked(
-    packed: DataFrame, window: int = 7, zeta_k: int = 3
-) -> DataFrame:
+def decode_refs_bitpacked(packed: DataFrame, zeta_k: int = 3) -> DataFrame:
     """Exact inverse of encode_refs_bitpacked -> (src, dsts array<long>
     sorted). Chunks are self-contained, so this is a shuffle-free
     mapInPandas — each parquet row group decodes where it is read."""
@@ -311,7 +271,7 @@ def decode_refs_bitpacked(
                 pdf["first_src"], pdf["n_rows"], pdf["payload"]
             ):
                 for src, cur in _unpack_chunk(
-                    int(first), int(n), bytes(payload), window, zeta_k
+                    int(first), int(n), bytes(payload), zeta_k
                 ):
                     o_src.append(src)
                     o_dsts.append(cur.tolist())
@@ -321,7 +281,7 @@ def decode_refs_bitpacked(
 
 
 def successors_from_bitpacked_batch(
-    packed: DataFrame, probes: DataFrame, window: int = 7, zeta_k: int = 3
+    packed: DataFrame, probes: DataFrame, zeta_k: int = 3
 ) -> DataFrame:
     """Batch random access on the bit-packed layout: ONE distributed job.
     A broadcast range join matches each probe to its single chunk (chunk
@@ -337,7 +297,7 @@ def successors_from_bitpacked_batch(
         payload = bytes(pdf["payload"].iloc[0])
         want = set(int(u) for u in pdf["_u"])
         o_src, o_dsts = [], []
-        for src, cur in _unpack_chunk(first, n, payload, window, zeta_k):
+        for src, cur in _unpack_chunk(first, n, payload, zeta_k):
             if src in want:
                 o_src.append(src)
                 o_dsts.append([int(x) for x in cur])
@@ -353,7 +313,7 @@ def successors_from_bitpacked_batch(
 
 
 def successors_from_bitpacked(
-    packed: DataFrame, u: int, window: int = 7, zeta_k: int = 3
+    packed: DataFrame, u: int, zeta_k: int = 3
 ) -> DataFrame:
     """Random-access successors(u): ONE pruned job fetches the single
     chunk row with first_src <= u <= last_src (chunk src-ranges are
@@ -365,8 +325,7 @@ def successors_from_bitpacked(
     ).collect()
     for row in rows:
         for src, cur in _unpack_chunk(
-            int(row.first_src), int(row.n_rows), bytes(row.payload), window,
-            zeta_k,
+            int(row.first_src), int(row.n_rows), bytes(row.payload), zeta_k
         ):
             if src == u:
                 return spark.createDataFrame(

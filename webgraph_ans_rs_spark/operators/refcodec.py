@@ -50,11 +50,16 @@ whole [rows × window] matrix of candidate costs (copy-block count +
 residual count). Only the choice itself — cheapest candidate whose chain
 is still short enough — is a scalar loop, over small ints, because each
 list's chain depth depends on the choices before it. Decode stays a
-sequential per-list pass: each list needs its decoded reference.
+sequential per-list pass: each list needs its decoded reference. One
+list rebuild (``_rebuild_list``) serves every decoder, columnar and
+bit-packed.
 
 A referenced list must sit within the previous ``window`` ROWS of the
 same bucket and have chain depth < ``max_ref`` (BVGraph maxrefcount;
-cnr-2000 uses 3) — decode retains only a window-sized deque.
+cnr-2000 uses 3). So ``decode_refs`` holds at most ``window`` decoded
+lists at a time, and the point reads decode only the ≤ max_ref hops of
+one chain. The bit-packed decoders need no window: a reference never
+leaves its chunk, so they resolve it against the chunk's decoded lists.
 
 All arithmetic — residual gaps AND the ref delta — is int64 with
 two's-complement wraparound (numpy's native behavior, the same mod-2⁶⁴
@@ -63,6 +68,8 @@ arbitrary hashed ids spanning the full int64 range, not just dense ones.
 """
 
 from __future__ import annotations
+
+from collections import deque
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -104,6 +111,27 @@ def _apply_blocks(ref_list, blocks: list[int]):
     if not pieces:
         return ref_list[:0]
     return np.concatenate(pieces)
+
+
+def _rebuild_list(src: int, gaps, ref_list=None, blocks=()):
+    """Inverse of one ``_encode_rows`` row, shared by every decoder: the
+    residuals are the mod-2⁶⁴ cumsum of ``gaps`` from ``src``; with a
+    ``ref_list``, the runs ``blocks`` copy from it merge in sorted."""
+    import numpy as np
+
+    with np.errstate(over="ignore"):
+        res = np.cumsum(np.asarray(gaps, dtype=np.int64)) + np.int64(src)
+    if ref_list is None:
+        return res
+    return np.sort(np.concatenate([_apply_blocks(ref_list, blocks), res]))
+
+
+def _ref_src(src: int, ref: int) -> int:
+    """The referenced src of a stored ``ref = src − ref_src`` (mod 2⁶⁴)."""
+    import numpy as np
+
+    with np.errstate(over="ignore"):
+        return int(np.int64(src) - np.int64(ref))
 
 
 def _encode_rows(srcs, dsts_seq, window: int, max_ref: int, reset_every=None):
@@ -279,11 +307,10 @@ def _encode_pdf(pdf, window: int, max_ref: int):
 
 
 def _decode_pdf(pdf, window: int):
-    import numpy as np
     import pandas as pd
 
     pdf = pdf.sort_values("src")
-    win: list[tuple[int, "np.ndarray"]] = []
+    recent = deque(maxlen=window)  # (src, decoded list) of the last rows
     o_src, o_dsts = [], []
     for src, ref, blocks, res_gaps in zip(
         pdf["src"].tolist(),
@@ -291,35 +318,19 @@ def _decode_pdf(pdf, window: int):
         pdf["blocks"].to_numpy(),
         pdf["res_gaps"].to_numpy(),
     ):
-        gaps = np.asarray(res_gaps, dtype=np.int64)
-        if len(gaps):
-            with np.errstate(over="ignore"):
-                res = np.cumsum(gaps) + src  # int64 wraparound == encode's
-        else:
-            res = gaps
-        if ref == 0:
-            cur = res
-        else:
-            # mod-2^64 inverse of encode's wrapped ref = src − ref_src
-            with np.errstate(over="ignore"):
-                rs = int(np.int64(src) - np.int64(ref))
-            rl = None
-            for ws, wl in win:
-                if ws == rs:
-                    rl = wl
-                    break
-            if rl is None:
+        ref_list = None
+        if ref:
+            rs = _ref_src(src, ref)
+            ref_list = next((lst for s, lst in recent if s == rs), None)
+            if ref_list is None:
                 raise ValueError(
                     f"decode_refs: referenced list {rs} for {src} "
                     f"not within the {window}-row window"
                 )
-            copied = _apply_blocks(rl, list(blocks))
-            cur = np.sort(np.concatenate([copied, res]))
+        cur = _rebuild_list(src, res_gaps, ref_list, blocks)
         o_src.append(src)
         o_dsts.append(cur.tolist())
-        win.append((src, cur))
-        if len(win) > window:
-            win.pop(0)
+        recent.append((src, cur))
     return pd.DataFrame({"src": o_src, "dsts": o_dsts})
 
 
@@ -378,26 +389,12 @@ def _decode_chain(rows: dict, u: int):
     """Decode u's successor list from the src→(ref, blocks, res_gaps) map
     by walking ONLY its reference chain (≤ max_ref hops) — every chain
     member lies in [root_src, u] by construction."""
-    import numpy as np
-
     ref, blocks, res_gaps = rows[u]
-    gaps = np.asarray(res_gaps, dtype=np.int64)
-    if len(gaps):
-        with np.errstate(over="ignore"):
-            res = np.cumsum(gaps) + u
-    else:
-        res = gaps
-    if ref == 0:
-        return res
-    with np.errstate(over="ignore"):
-        rs = int(np.int64(u) - np.int64(ref))
-    copied = _apply_blocks(_decode_chain(rows, rs), list(blocks))
-    return np.sort(np.concatenate([copied, res]))
+    ref_list = _decode_chain(rows, _ref_src(u, ref)) if ref else None
+    return _rebuild_list(u, res_gaps, ref_list, blocks)
 
 
-def successors_from_refs_batch(
-    enc: DataFrame, probes: DataFrame, window: int = 7
-) -> DataFrame:
+def successors_from_refs_batch(enc: DataFrame, probes: DataFrame) -> DataFrame:
     """Batch random access: (vertex) probe frame → (src, dsts) for every
     probe present, in ONE distributed job — the reference's random-access
     protocol shape (examples/bench_random_access.rs:15,28-41 enumerates
@@ -437,7 +434,7 @@ def successors_from_refs_batch(
     )
 
 
-def successors_from_refs(enc: DataFrame, u: int, window: int = 7) -> DataFrame:
+def successors_from_refs(enc: DataFrame, u: int) -> DataFrame:
     """Random-access successors(u) on the ref-coded table via the stored
     chain root: ONE job reads only the rows in [u's root_src, u] of u's
     bucket (≤ window·max_ref+1 rows — the chain hops are each ≤ window

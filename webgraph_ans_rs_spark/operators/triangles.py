@@ -139,23 +139,6 @@ def triangles_per_vertex(edges: DataFrame, verts: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count_csr(adj: DataFrame) -> DataFrame:
-    """Cross-check variant on the CSR table: sorted-neighbor intersection via
-    ``array_intersect`` — the direct analogue of the reference's
-    sorted-successor merge (successor lists are sorted by format invariant,
-    tests/test_bvgraph.rs:88-91). ``adj`` must be the CSR of the *oriented*
-    edge set (a<b)."""
-    e = adj.select(F.col("src").alias("a"), F.explode("dsts").alias("b"))
-    j = e.join(adj.withColumnRenamed("src", "a_"), e["a"] == F.col("a_")).drop("a_")
-    j = j.withColumnRenamed("dsts", "na").join(
-        adj.withColumnRenamed("src", "b_").withColumnRenamed("dsts", "nb"),
-        F.col("b") == F.col("b_"),
-    )
-    return j.agg(
-        F.coalesce(F.sum(F.size(F.array_intersect("na", "nb"))), F.lit(0)).alias("n_triangles")
-    )
-
-
 def transitivity(edges: DataFrame, round_dp: int = 6) -> DataFrame:
     """Single row (n_triangles, n_wedges, global_cc) — the global
     clustering coefficient 3·T/W of the undirected graph, the classic
