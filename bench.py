@@ -231,7 +231,7 @@ def main() -> None:
             for nm, df, opts in variants:
                 path = f"{tmp}/{block}-{nm}"
                 # ref-coded tables are keyed/sorted by (bucket, src) — the
-                # layout decode_refs' sequential window pass relies on
+                # layout decode_refs' sequential per-bucket pass relies on
                 keys = ("bucket", "src") if "bucket" in df.columns else ("src",)
                 w = (
                     df.repartition(8, keys[0])

@@ -52,11 +52,12 @@ def test_bitpack_copy_heavy_lists(spark):
     """Near-identical consecutive lists (the BV copy case) round-trip
     with blocks + implicit trailing runs exercised. Lists 30-39 repeat
     lists 20-29: under the window-16, unbounded-chain config they copy
-    from 10 rows back, beyond the default window of 7, and every decoder
-    resolves them with its default arguments."""
+    from 10 rows back, beyond the default window of 7, and every decoder,
+    bit-packed and columnar, resolves them with its default arguments."""
     from webgraph_ans_rs_spark.operators.bitpack import (
         successors_from_bitpacked_batch,
     )
+    from webgraph_ans_rs_spark.operators.refcodec import decode_refs, encode_refs
 
     base = list(range(0, 40, 2))
     rows = []
@@ -77,6 +78,8 @@ def test_bitpack_copy_heavy_lists(spark):
         }
         assert _adj_map(successors_from_bitpacked(packed, 35)) == {35: want[35]}
         packed.unpersist()
+        enc = encode_refs(adj, num_buckets=1, **config)
+        assert _adj_map(decode_refs(enc)) == want
 
 
 def test_bitpack_hashed_full_range_ids(spark):

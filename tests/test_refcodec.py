@@ -98,7 +98,7 @@ def test_ref_chain_depth_bounded(spark):
 
 def test_references_stay_within_window_rows(spark):
     """Each reference resolves within the previous `window` ROWS of its
-    bucket — the retention contract decode_refs relies on."""
+    bucket — the contract that bounds a point read's chain slice."""
     window = 7
     edges = weblike_edges(spark)
     enc = encode_refs(build_csr_adjacency(edges), num_buckets=2, window=window)

@@ -7,6 +7,8 @@ and against a pure-Python Tarjan oracle on the seeded graph.
 
 from __future__ import annotations
 
+import pytest
+
 from webgraph_ans_rs_spark.operators.scc import strongly_connected_components
 
 from tests.conftest import seeded_random_graph
@@ -95,8 +97,32 @@ def _tarjan(n, es):
     return out
 
 
-def test_scc_matches_tarjan_on_seeded_graph(spark):
-    edges, verts, es, n = seeded_random_graph(spark)
+def _tendril_graph(spark):
+    """A 41-vertex chain 0→…→40 into the 10-cycle 50..59, a chain
+    59→60→…→80 out of it, isolated 41..49, and 600 random arcs among
+    100..299: a deep trim cascade, vertices whose in- and out-degree
+    both reach 0, and isolated vertices."""
+    import random
+
+    n = 300
+    es = [(i, i + 1) for i in range(40)] + [(40, 50)]
+    es += [(50 + i, 50 + (i + 1) % 10) for i in range(10)]
+    es += [(i, i + 1) for i in range(59, 80)]
+    rng = random.Random(7)
+    for _ in range(600):
+        a, b = rng.randrange(100, 300), rng.randrange(100, 300)
+        if a != b:
+            es.append((a, b))
+    es = sorted(set(es))
+    edges = spark.createDataFrame(es, "src long, dst long")
+    verts = spark.createDataFrame([(i,) for i in range(n)], "vertex long")
+    return edges, verts, es, n
+
+
+@pytest.mark.parametrize("graph", [seeded_random_graph, _tendril_graph],
+                         ids=["seeded", "tendril"])
+def test_scc_matches_tarjan_on_seeded_graph(spark, graph):
+    edges, verts, es, n = graph(spark)
     assert _got(edges, verts) == _tarjan(n, es)
 
 

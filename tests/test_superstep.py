@@ -1,7 +1,8 @@
 """Plan shape and session hygiene of the iterative kernels: the
 PageRank-family superstep (operators/superstep.py, pagerank.py, hits.py),
 HyperBall and the exact balls (neighborhood.py, bfs.py), label
-propagation (labelprop.py) and components (components.py)."""
+propagation (labelprop.py), components (components.py) and the peel and
+frontier kernels built on them (kcore.py, scc.py, sampling.py)."""
 
 from __future__ import annotations
 
@@ -13,6 +14,7 @@ from webgraph_ans_rs_spark.operators import neighborhood as nb
 from webgraph_ans_rs_spark.operators.bfs import bfs_distances
 from webgraph_ans_rs_spark.operators.components import connected_components
 from webgraph_ans_rs_spark.operators.hits import hits, hits_halfstep_probe
+from webgraph_ans_rs_spark.operators.kcore import kcore
 from webgraph_ans_rs_spark.operators.labelprop import (
     _argmax_labels,
     label_propagation,
@@ -26,6 +28,8 @@ from webgraph_ans_rs_spark.operators.pagerank import (
     ppr_superstep_probe,
     superstep_probe,
 )
+from webgraph_ans_rs_spark.operators.sampling import khop_neighbors
+from webgraph_ans_rs_spark.operators.scc import strongly_connected_components
 from webgraph_ans_rs_spark.plans.derived_graph import undirected_symmetrize
 
 COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
@@ -214,6 +218,13 @@ CASES = {
     )[0],
     "label_propagation_unconverged": _lp_unconverged,
     "connected_components": lambda e, v, s: connected_components(e, v),
+    "kcore": lambda e, v, s: kcore(e, k=2),
+    "strongly_connected_components": lambda e, v, s: strongly_connected_components(
+        e, v
+    ),
+    "khop_neighbors": lambda e, v, s: khop_neighbors(
+        e, s.select(F.col("vertex").alias("seed")), k=2, pct=100
+    ),
 }
 
 

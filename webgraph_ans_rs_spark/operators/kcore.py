@@ -8,28 +8,84 @@ remain; the fixpoint is unique (independent of deletion order), so a
 fixpoint loop and an unrolled oracle agree as long as the oracle unrolls
 at least as many rounds as the loop needs.
 
-Scale discipline (round 7): the edge set is materialized ONCE and never
-rewritten; the loop's mutable state is the V-sized degree table. Per
-round the removed delta's incident edges are counted by one join of the
-cached edge table against the delta (AQE broadcasts the delta when it is
-small — after round 1 it shrinks geometrically) and the degree table is
-updated by an anti-join (drop removed) plus a left join (subtract the
-per-neighbor decrement). Each edge (u, v) decrements v exactly once —
-the round u is removed in — so the maintained degree equals the degree
-inside the surviving subgraph at every round. The previous formulation
-anti-joined and localCheckpointed the FULL E-sized edge set every round
-(O(E) shuffle + materialization per round, measured 24 s at 8.6M edges
-for a 13-round peel); the degree-maintenance form rewrites only O(V)
-state per round (measured 9 s on the same peel, guide §2.3 "shuffle
-fewer bytes").
+The loop is ``peel``, a degree-table peel that the SCC trim
+(operators/scc.py) shares: k-core peels one degree column under ``d < k``,
+the trim peels in- and out-degree under ``din == 0 | dout == 0``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+from operator import or_
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.derived_graph import undirected_symmetrize
+
+
+def drop(deg: DataFrame, removed: DataFrame, arcs: list) -> DataFrame:
+    """One peel round: ``deg`` minus the ``removed`` vertices, every
+    surviving degree decremented by the arcs the removal cost it.
+
+    ``deg`` is the V-sized table (vertex, one column per degree) and
+    ``arcs`` lists (table, key, target, column): an arc whose ``key`` end
+    is removed costs its ``target`` end one unit of ``column``. The arc
+    tables are joined against the removed set but never rewritten, so the
+    state a round materializes is O(V), not O(E): the edge-rewrite form
+    measured 24 s at 8.6M edges for a 13-round k-core peel, this one 9 s
+    (guide §2.3 "shuffle fewer bytes"). Each arc's key end leaves in at
+    most one round, so every surviving target is decremented exactly once
+    per lost arc and the table holds the degrees INSIDE the surviving
+    subgraph after every round. A vertex whose every degree reaches 0
+    leaves here, without costing a round — as if it had vanished from a
+    rewritten edge table."""
+    cols = [c for c in deg.columns if c != "vertex"]
+    dec = reduce(
+        DataFrame.unionByName,
+        [
+            table.join(removed, table[key] == removed["vertex"]).select(
+                F.col(target).alias("vertex"),
+                *[F.lit(int(c == col)).alias(c) for c in cols],
+            )
+            for table, key, target, col in arcs
+        ],
+    ).groupBy("vertex").agg(*[F.sum(c).alias(f"_{c}") for c in cols])
+    return (
+        deg.join(removed, "vertex", "left_anti")
+        .join(dec, "vertex", "left")
+        .select(
+            "vertex",
+            *[(F.col(c) - F.coalesce(f"_{c}", F.lit(0))).alias(c) for c in cols],
+        )
+        .where(reduce(or_, [F.col(c) > 0 for c in cols]))
+        .localCheckpoint(eager=True)
+    )
+
+
+def peel(deg: DataFrame, arcs: list, leaves: Column, max_rounds: int) -> DataFrame:
+    """Drop every vertex matching ``leaves`` (a predicate over the degree
+    columns) until none does; returns the surviving rows of ``deg`` with
+    their degrees inside the surviving subgraph (see ``drop``).
+
+    ``max_rounds`` bounds the removal rounds: max_rounds + 1 fixpoint
+    checks bracket max_rounds removals, so a peel that needs exactly
+    max_rounds removals still gets its final check instead of raising —
+    the unrolled DuckDB k-core oracle (kcore_sql) runs the same bound.
+    Raises if the bound is hit first, so a caller never receives a
+    non-fixpoint silently."""
+    for round_no in range(max_rounds + 1):
+        removed = (
+            deg.where(leaves)
+            .select("vertex")
+            .localCheckpoint(eager=True)  # computed once, reused by drop's joins
+        )
+        if removed.limit(1).count() == 0:
+            return deg
+        if round_no == max_rounds:
+            break
+        deg = drop(deg, removed, arcs)
+    raise RuntimeError(f"peel did not converge within max_rounds={max_rounds}")
 
 
 def kcore(
@@ -51,50 +107,10 @@ def kcore(
     # graph has none, so the oracle's und CTE needs no mirror filter
     und = undirected_symmetrize(edges).where(F.col("src") != F.col("dst"))
     e = und.repartition("src").localCheckpoint(eager=True)
-    # V-sized loop state: current degree of every still-alive vertex.
-    # Invariant entering each round: deg holds exactly the surviving
-    # vertices with their degree INSIDE the surviving subgraph.
     deg = (
-        e.groupBy("src").agg(F.count("*").alias("d")).localCheckpoint(eager=True)
+        e.groupBy(F.col("src").alias("vertex"))
+        .agg(F.count("*").alias("d"))
+        .localCheckpoint(eager=True)
     )
-    # max_rounds + 1 fixpoint checks bracket max_rounds removal rounds: a
-    # peel that needs exactly max_rounds removals still gets its final
-    # convergence check instead of raising — the unrolled DuckDB oracle
-    # (kcore_sql) runs the same bound, so the engine is never strictly
-    # weaker than its own oracle at the boundary
-    for round_no in range(max_rounds + 1):
-        removed = (
-            deg.where(F.col("d") < k)
-            .select(F.col("src").alias("rm"))
-            .localCheckpoint(eager=True)  # computed once, reused in 2 joins
-        )
-        if removed.limit(1).count() == 0:
-            # the maintained degrees ARE the in-core degrees (invariant)
-            return deg.select(
-                F.col("src").alias("vertex"), F.col("d").alias("core_deg")
-            )
-        if round_no == max_rounds:
-            break
-        # edges whose SOURCE was removed this round decrement their dst;
-        # each edge's src is removed in at most one round, so every
-        # surviving neighbor is decremented exactly once per lost edge.
-        # The immutable cached edge table is only SCANNED (AQE broadcasts
-        # the shrinking delta); nothing E-sized is rewritten.
-        dec = (
-            e.join(removed, e["src"] == F.col("rm"))
-            .groupBy("dst")
-            .agg(F.count("*").alias("c"))
-        )
-        deg = (
-            deg.join(removed, deg["src"] == F.col("rm"), "left_anti")
-            .join(dec, deg["src"] == dec["dst"], "left")
-            .select("src", (F.col("d") - F.coalesce("c", F.lit(0))).alias("d"))
-            # a vertex whose degree reaches 0 exits the alive set NOW —
-            # mirroring the edge-rewrite formulation, where it simply
-            # vanished from the edge table without costing a removal round
-            .where(F.col("d") > 0)
-            .localCheckpoint(eager=True)
-        )
-    raise RuntimeError(
-        f"kcore: peel did not converge within max_rounds={max_rounds}"
-    )
+    core = peel(deg, [(e, "src", "dst", "d")], F.col("d") < k, max_rounds)
+    return core.withColumnRenamed("d", "core_deg")

@@ -56,10 +56,11 @@ bit-packed.
 
 A referenced list must sit within the previous ``window`` ROWS of the
 same bucket and have chain depth < ``max_ref`` (BVGraph maxrefcount;
-cnr-2000 uses 3). So ``decode_refs`` holds at most ``window`` decoded
-lists at a time, and the point reads decode only the ≤ max_ref hops of
-one chain. The bit-packed decoders need no window: a reference never
-leaves its chunk, so they resolve it against the chunk's decoded lists.
+cnr-2000 uses 3). The table stores ``ref`` as a src delta, not the
+window, so no decoder takes one: ``decode_refs`` resolves a reference
+against the lists its bucket has already decoded (it keeps them all for
+its output anyway), the bit-packed decoders against their chunk's, and
+the point reads decode only the ≤ max_ref hops of one chain.
 
 All arithmetic — residual gaps AND the ref delta — is int64 with
 two's-complement wraparound (numpy's native behavior, the same mod-2⁶⁴
@@ -68,8 +69,6 @@ arbitrary hashed ids spanning the full int64 range, not just dense ones.
 """
 
 from __future__ import annotations
-
-from collections import deque
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -306,11 +305,11 @@ def _encode_pdf(pdf, window: int, max_ref: int):
     )
 
 
-def _decode_pdf(pdf, window: int):
+def _decode_pdf(pdf):
     import pandas as pd
 
     pdf = pdf.sort_values("src")
-    recent = deque(maxlen=window)  # (src, decoded list) of the last rows
+    decoded = {}  # src -> decoded list, every list of the bucket so far
     o_src, o_dsts = [], []
     for src, ref, blocks, res_gaps in zip(
         pdf["src"].tolist(),
@@ -321,16 +320,16 @@ def _decode_pdf(pdf, window: int):
         ref_list = None
         if ref:
             rs = _ref_src(src, ref)
-            ref_list = next((lst for s, lst in recent if s == rs), None)
+            ref_list = decoded.get(rs)
             if ref_list is None:
                 raise ValueError(
                     f"decode_refs: referenced list {rs} for {src} "
-                    f"not within the {window}-row window"
+                    "is not an earlier list of its bucket"
                 )
         cur = _rebuild_list(src, res_gaps, ref_list, blocks)
         o_src.append(src)
         o_dsts.append(cur.tolist())
-        recent.append((src, cur))
+        decoded[src] = cur
     return pd.DataFrame({"src": o_src, "dsts": o_dsts})
 
 
@@ -378,10 +377,11 @@ def encode_refs(
     )
 
 
-def decode_refs(enc: DataFrame, window: int = 7) -> DataFrame:
-    """Exact inverse of ``encode_refs`` → (src, dsts array<long> sorted)."""
+def decode_refs(enc: DataFrame) -> DataFrame:
+    """Exact inverse of ``encode_refs`` → (src, dsts array<long> sorted),
+    whatever window the table was encoded with."""
     return enc.groupBy("bucket").applyInPandas(
-        lambda pdf: _decode_pdf(pdf, window), "src long, dsts array<long>"
+        _decode_pdf, "src long, dsts array<long>"
     )
 
 

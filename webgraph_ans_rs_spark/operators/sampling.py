@@ -22,6 +22,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .bfs import bfs_levels
+
 _HEXD = "0123456789abcdef"
 
 
@@ -43,39 +45,13 @@ def khop_neighbors(
 ) -> DataFrame:
     """(seed, vertex, hop) — vertices reachable from each seed within k
     hops through the sampled edge set; hop = minimum hop count (seeds
-    themselves excluded). One shuffle join per hop; frontiers stay
-    per-seed so the output is the per-seed neighborhood a GNN batch loader
-    consumes. For k > 1 the sampled edge set is cached across hops (it is
-    scanned once per hop) and released once the result is materialized."""
-    sampled = sample_edges(edges, pct).select("src", "dst")
-    if k > 1:
-        sampled = sampled.persist()
-    # try/finally: a failed per-hop action must not leak the cached sample
-    # for the session lifetime
-    try:
-        frontier = seeds.select(F.col("seed"), F.col("seed").alias("v"))
-        reached = None
-        for hop in range(1, k + 1):
-            frontier = (
-                frontier.join(sampled, frontier["v"] == sampled["src"])
-                .select("seed", F.col("dst").alias("v"))
-                .dropDuplicates(["seed", "v"])
-            )
-            layer = frontier.select(
-                "seed", F.col("v").alias("vertex"), F.lit(hop).alias("hop")
-            )
-            reached = layer if reached is None else reached.unionAll(layer)
-        out = (
-            reached.where(F.col("vertex") != F.col("seed"))
-            .groupBy("seed", "vertex")
-            .agg(F.min("hop").cast("int").alias("hop"))
-        )
-        if k > 1:
-            out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if k > 1:
-            sampled.unpersist()
+    themselves excluded). One per-seed ``bfs_levels`` ball: one shuffle
+    join per hop, frontiers keyed by seed, so the output is the per-seed
+    neighborhood a GNN batch loader consumes."""
+    seeds = seeds.select("seed", F.col("seed").alias("vertex"))
+    balls = bfs_levels(sample_edges(edges, pct), seeds, k, key="seed")
+    hops = balls.where(F.col("vertex") != F.col("seed"))
+    return hops.toDF("seed", "vertex", "hop")
 
 
 def _rank_hex(seed_col, v_col):
