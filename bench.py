@@ -13,8 +13,8 @@ synthetic inputs (pure functions of seed, identical at any parallelism):
 * pipeline_extract — HTML parse → edge build on synthetic pages (the
   vectorized-UDF path).
 
-Scaling-efficiency protocol (local[8] vs local[32]) lives in
-tools/bench_scaling.py, which shells out to this file per parallelism level.
+Scaling-efficiency protocol (N vs 4N cores, interleaved fresh-JVM runs)
+lives in tools/bench_scaling_interleaved.py.
 """
 
 from __future__ import annotations
@@ -217,7 +217,6 @@ def main() -> None:
         from webgraph_ans_rs_spark.operators.graph_build import (
             build_csr_adjacency,
             encode_gaps,
-            encode_intervals,
         )
         from webgraph_ans_rs_spark.plans.bench_graph import (
             synthetic_edges_crawl,
@@ -279,9 +278,9 @@ def main() -> None:
         ladj.unpersist()
         ledges.unpersist()
         # consecutivity block: nav/sibling link runs on top of offset
-        # locality — probes whether BV-style interval codes pay above
-        # parquet v2 (measured: they don't; DELTA_BINARY_PACKED already
-        # stores gap-1 runs at ~0 bits — BASELINE.md "Interval coding")
+        # locality; gap-1 runs cost ~0 bits under DELTA_BINARY_PACKED, which
+        # is why BV-style interval codes do not pay above parquet v2
+        # (BASELINE.md "Interval coding")
         cedges = synthetic_edges_crawl(spark, BENCH_VERTICES // 4).persist()
         cadj = build_csr_adjacency(cedges, 8).persist()
         _measure_layouts(
@@ -289,7 +288,6 @@ def main() -> None:
             cedges,
             (
                 ("csr_dense_gaps", encode_gaps(cadj, int_gaps=True), v2),
-                ("csr_intervals", encode_intervals(cadj), v2),
                 ("csr_dense_refs", _narrow_refs(encode_refs(cadj, 8)), v2),
             ),
         )

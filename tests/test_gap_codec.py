@@ -94,62 +94,3 @@ def test_lp_argmax_agg_equals_window_seeded(spark):
     got = {r.vertex: r.label for r in label_propagation(edges, verts, num_iter=2).collect()}
     assert got == python_lp(es, n, 2)
 
-
-def test_interval_roundtrip_random_graph(spark):
-    from webgraph_ans_rs_spark.operators.graph_build import (
-        decode_intervals,
-        encode_intervals,
-    )
-
-    edges, _, _, _ = seeded_random_graph(spark)
-    adj = build_csr_adjacency(edges)
-    for m in (2, 4):
-        rt = decode_intervals(encode_intervals(adj, min_interval=m), min_interval=m)
-        assert _canon(rt) == _canon(adj)
-
-
-def test_interval_roundtrip_runs_and_edge_cases(spark):
-    """All-interval lists, all-residual lists, runs abutting src, single
-    elements, and a mixed list — each must survive encode→decode exactly,
-    and interval extraction must actually fire where runs exist."""
-    from pyspark.sql import functions as F
-
-    from webgraph_ans_rs_spark.operators.graph_build import (
-        decode_intervals,
-        encode_intervals,
-    )
-
-    cases = {
-        10: [11, 12, 13, 14, 15],          # one pure run (len 5 ≥ 4)
-        20: [3, 90, 400],                  # pure residuals
-        30: [28, 29, 31, 32, 33, 34, 99],  # short run (residual) + long run + tail
-        40: [41],                          # singleton
-        50: [51, 52, 53, 54, 60, 61, 62, 63],  # two runs of exactly min len
-    }
-    edges = spark.createDataFrame(
-        [(s, d) for s, ds in cases.items() for d in ds], "src long, dst long"
-    )
-    adj = build_csr_adjacency(edges)
-    enc = encode_intervals(adj, min_interval=4)
-    got = {r.src: (list(r.dsts_ints), list(r.dsts_res)) for r in enc.collect()}
-    assert got[10] == ([(1, 1)], [])          # g=11-10, l=5-4
-    assert got[20] == ([], [-17, 87, 310])    # pure gap-coded residuals
-    assert got[30][0] == [(1, 0)]             # the 31..34 run: g=31-30, l=4-4
-    rt = decode_intervals(enc, min_interval=4)
-    assert {r.src: list(r.dsts) for r in rt.collect()} == cases
-
-
-def test_interval_parquet_roundtrip(spark, tmp_path):
-    from webgraph_ans_rs_spark.operators.graph_build import (
-        decode_intervals,
-        encode_intervals,
-    )
-
-    edges, _, _, _ = seeded_random_graph(spark)
-    adj = build_csr_adjacency(edges)
-    path = str(tmp_path / "ints")
-    encode_intervals(adj).write.option("parquet.writer.version", "v2").option(
-        "compression", "zstd"
-    ).parquet(path)
-    rt = decode_intervals(spark.read.parquet(path))
-    assert _canon(rt) == _canon(adj)

@@ -1,4 +1,4 @@
-"""Interleaved two-parallelism scaling protocol (the robust variant).
+"""Interleaved two-parallelism scaling protocol.
 
 Measured fact about this sandbox (BASELINE.md): identical Spark jobs vary
 ±50% across runs half an hour apart (host-level interference), so running
@@ -10,8 +10,8 @@ slows runs; the minimum is the best estimator of uncontended runtime).
 
     efficiency = (min T_N / min T_4N) / (4N/N)
 
-Writes BENCH_SCALING.json (same shape as tools/bench_scaling.py plus
-per-round raw numbers).
+Each level runs in a fresh JVM (tools/scaling_worker.py). Writes
+BENCH_SCALING.json: per-level minima, efficiency and per-round raw numbers.
 """
 
 from __future__ import annotations

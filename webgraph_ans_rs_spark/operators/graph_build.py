@@ -229,135 +229,6 @@ def decode_gaps(adj_gaps: DataFrame, first_from_src: bool = True) -> DataFrame:
     return adj_gaps.select(*others, decoded.alias("dsts"))
 
 
-def encode_intervals(adj: DataFrame, min_interval: int = 4) -> DataFrame:
-    """CSR with successor lists split into BV-style INTERVALS + gap-coded
-    residuals — the second half of the reference's compression thesis that
-    is expressible above parquet (the first half is plain gap coding,
-    ``encode_gaps``).
-
-    BVGraph stores each adjacency list as (a) maximal runs of consecutive
-    ids of length ≥ min_interval, coded as (left-extreme, length) pairs,
-    and (b) the leftover "residuals", gap-coded (reference: the interval /
-    residual split in /root/reference/src/bvgraph/mod.rs:13-23; WebGraph's
-    default min interval length is 4, which cnr-2000's 2.897 bits/link is
-    measured with). On a crawl-ordered graph, nav-menu / same-host links
-    make long consecutive runs common, and one (start, len) pair replaces
-    an entire run.
-
-    MEASURED VERDICT (round 3, BASELINE.md "Interval coding"): above
-    parquet v2 this layout LOSES to plain ``encode_gaps`` — 9.4 vs 8.6
-    bits/link on the consecutivity-heavy crawl fixture (40% of arcs in
-    runs), 11.6 vs 10.8 on the offset-only fixture (6%). A consecutive run
-    gap-codes to ``1,1,1,…`` which DELTA_BINARY_PACKED stores at ~0 bits
-    already, so BV's interval trick is redundant here and the second
-    nested column only adds rep/def-level overhead. Kept as a tested
-    opt-in because the trade flips in storage stacks WITHOUT delta page
-    encodings (plain row formats, msgpack/JSON sinks, or in-memory arrays
-    where a (start,len) pair genuinely replaces len cells).
-
-    Output schema: ``dsts`` → ``dsts_ints array<struct<g:int,l:int>>``
-    (g = left extreme minus previous interval's end, first minus src —
-    signed; l = run length − min_interval) + ``dsts_res array<int>``
-    (gap-coded exactly like encode_gaps(int_gaps=True)).
-
-    DENSE-ID ONLY: requires an order-preserving dense relabel first (ids
-    < 2^31, so plain long arithmetic can't overflow and int32 narrowing is
-    lossless — the same contract as encode_gaps(int_gaps=True)). Pure
-    column transforms — no shuffle, no Python; per-list fold cost is
-    bounded by build_csr_segments' max_segment at scale.
-    """
-    empty_runs = F.array().cast("array<struct<s:bigint,l:bigint>>")
-    one = F.lit(1).cast("bigint")
-
-    def _extend(acc, x):
-        last = F.element_at(acc, -1)
-        return F.when(
-            (F.size(acc) > 0) & (x == last["s"] + last["l"]),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.struct(last["s"].alias("s"), (last["l"] + one).alias("l"))),
-            ),
-        ).otherwise(
-            F.concat(acc, F.array(F.struct(x.alias("s"), one.alias("l"))))
-        )
-
-    runs = F.aggregate("dsts", empty_runs, _extend)
-    ints = F.filter(runs, lambda r: r["l"] >= F.lit(min_interval))
-    res = F.flatten(
-        F.transform(
-            F.filter(runs, lambda r: r["l"] < F.lit(min_interval)),
-            lambda r: F.sequence(r["s"], r["s"] + r["l"] - 1),
-        )
-    )
-    # gap-code the interval left extremes against the previous interval's
-    # end (first against src, signed — BV FirstResidual semantics), and
-    # store length − min_interval (always ≥ 0, small)
-    ints_ref = ints  # captured for element_at(prev) inside transform
-
-    def _gap_ints(r, i):
-        prev = F.element_at(ints_ref, i)  # i is 0-based → 1-based prev
-        g = F.when(i == F.lit(0), r["s"] - F.col("src")).otherwise(
-            r["s"] - (prev["s"] + prev["l"])
-        )
-        return F.struct(
-            g.cast("int").alias("g"),
-            (r["l"] - F.lit(min_interval)).cast("int").alias("l"),
-        )
-
-    ints_g = F.transform(ints, _gap_ints)
-    res_ref = res
-
-    def _gap_res(x, i):
-        return F.when(i == F.lit(0), x - F.col("src")).otherwise(
-            x - F.element_at(res_ref, i)
-        ).cast("int")
-
-    res_g = F.transform(res, _gap_res)
-    others = [c for c in adj.columns if c != "dsts"]
-    return adj.select(
-        *others, ints_g.alias("dsts_ints"), res_g.alias("dsts_res")
-    )
-
-
-def decode_intervals(adj_ints: DataFrame, min_interval: int = 4) -> DataFrame:
-    """Exact inverse of ``encode_intervals``: expand the (gap, len) interval
-    pairs back into runs, prefix-sum the residual gaps, merge-sort the two
-    disjoint sorted sets back into the successor array."""
-    expanded = F.aggregate(
-        F.col("dsts_ints"),
-        F.struct(
-            F.col("src").cast("long").alias("end"),
-            F.array().cast("array<long>").alias("out"),
-        ),
-        lambda s, r: F.struct(
-            (s.end + r["g"] + r["l"] + F.lit(min_interval)).alias("end"),
-            F.concat(
-                s.out,
-                F.sequence(
-                    s.end + r["g"],
-                    s.end + r["g"] + r["l"] + F.lit(min_interval) - 1,
-                ),
-            ).alias("out"),
-        ),
-        lambda s: s.out,
-    )
-    residuals = F.aggregate(
-        F.col("dsts_res"),
-        F.struct(
-            F.col("src").cast("long").alias("acc"),
-            F.array().cast("array<long>").alias("out"),
-        ),
-        lambda s, x: F.struct(
-            (s.acc + x).alias("acc"),
-            F.concat(s.out, F.array(s.acc + x)).alias("out"),
-        ),
-        lambda s: s.out,
-    )
-    decoded = F.array_sort(F.concat(expanded, residuals))
-    others = [c for c in adj_ints.columns if c not in ("dsts_ints", "dsts_res")]
-    return adj_ints.select(*others, decoded.alias("dsts"))
-
-
 def dense_ids(
     verts: DataFrame, col: str = "vertex", num_partitions: int | None = None
 ) -> DataFrame:

@@ -106,7 +106,7 @@ def kcore(
     # cnr-2000, whose BVGraph stream contains them; the derived gate
     # graph has none, so the oracle's und CTE needs no mirror filter
     und = undirected_symmetrize(edges).where(F.col("src") != F.col("dst"))
-    e = und.repartition("src").localCheckpoint(eager=True)
+    e = und.localCheckpoint(eager=True)
     deg = (
         e.groupBy(F.col("src").alias("vertex"))
         .agg(F.count("*").alias("d"))

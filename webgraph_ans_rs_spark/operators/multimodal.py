@@ -1,25 +1,22 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Images/audio/video ride through the engine as ``binary`` columns with a
+Images and video ride through the engine as ``binary`` columns with a
 metadata struct — the Spark-side contract (schema, partitioning, Arrow
-batch shape) is real and tested. PNG, GIF, and baseline JPEG payloads
-decode FOR REAL via the pure-Python codecs (operators/png.py — DEFLATE
-ships in zlib; operators/gif.py — LZW is integer math; operators/
-jpeg.py — Huffman + IDCT are numpy), including ANIMATED GIFs, which
-make ``frame_sample`` a real frame sampler for a real container.
-Progressive JPEG and MP3/MP4 decoders are not in this container, so
-those kernels remain STUBS: a clearly-marked deterministic fake behind
-the same ``mapInPandas`` signature a real decoder would use. Swapping
-in an ffmpeg-backed decoder changes one function body, not the plan.
+batch shape) is real and tested. The engine ships no media codec: both
+decode kernels are clearly-marked deterministic STUBS, pure functions of
+the payload bytes behind the ``mapInPandas`` signature a real decoder
+would use, so the DuckDB oracles reproduce them exactly. Swapping in a
+real decoder changes one function body, not the plan.
 
 Operators:
   * attach_payload_meta — cheap metadata (byte length, magic-sniffed kind,
     md5) from built-ins only; no Python in the hot path.
   * decode_image_batches — mapInPandas kernel: binary → (width, height,
     n_channels, features array<float>). DETERMINISTIC FAKE decode.
-  * frame_sample — video payloads → one row per sampled frame index
+  * frame_sample — payloads → one row per sampled frame index
     (fan-out happens inside the Arrow batch, the idiomatic shape for
-    per-item expansion without exploding through the JVM).
+    per-item expansion without exploding through the JVM). DETERMINISTIC
+    FAKE frames.
 """
 
 from __future__ import annotations
@@ -90,65 +87,14 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, list[float]]:
     return width, height, channels, feats
 
 
-def _real_decode_png(raw: bytes):
-    """REAL decode for payloads that parse as PNG (pure-stdlib codec,
-    operators/png.py — no PIL needed). Features: per-channel mean and
-    std normalized to [0,1], padded/truncated to N_FAKE_FEATURES,
-    rounded 6dp (deterministic)."""
-    from .png import decode_png
-
-    w, h, c, px = decode_png(raw)
-    a = px.astype("float64") / 255.0
-    feats = []
-    for ch in range(c):
-        feats.append(round(float(a[:, :, ch].mean()), 6))
-        feats.append(round(float(a[:, :, ch].std()), 6))
-    feats = (feats + [0.0] * N_FAKE_FEATURES)[:N_FAKE_FEATURES]
-    return w, h, c, feats
-
-
-def _real_decode_jpeg(raw: bytes):
-    """REAL decode for payloads that parse as baseline JPEG (pure
-    Python/numpy codec, operators/jpeg.py): same mean/std feature recipe
-    as the PNG/GIF paths."""
-    from .jpeg import decode_jpeg
-
-    w, h, px = decode_jpeg(raw)
-    a = px.astype("float64") / 255.0
-    feats = []
-    for ch in range(3):
-        feats.append(round(float(a[:, :, ch].mean()), 6))
-        feats.append(round(float(a[:, :, ch].std()), 6))
-    feats = (feats + [0.0] * N_FAKE_FEATURES)[:N_FAKE_FEATURES]
-    return w, h, 3, feats
-
-
-def _real_decode_gif(raw: bytes):
-    """REAL decode for payloads that parse as GIF (pure-stdlib LZW codec,
-    operators/gif.py): first frame's composited RGB canvas, same
-    mean/std feature recipe as the PNG path."""
-    from .gif import decode_gif
-
-    w, h, frames = decode_gif(raw, max_frames=1)
-    a = frames[0].astype("float64") / 255.0
-    feats = []
-    for ch in range(3):
-        feats.append(round(float(a[:, :, ch].mean()), 6))
-        feats.append(round(float(a[:, :, ch].std()), 6))
-    feats = (feats + [0.0] * N_FAKE_FEATURES)[:N_FAKE_FEATURES]
-    return w, h, 3, feats
-
-
 def decode_image_batches(
     df: DataFrame, key_col: str = "key", payload_col: str = "payload"
 ) -> DataFrame:
     """mapInPandas decode: Arrow-batched, one output row per input row.
 
-    Payloads that parse as REAL PNGs or GIFs decode for real (stdlib
-    codecs); everything else — JPEG/video (codecs not in this container)
-    and synthetic fixtures that only carry a magic — falls back to the
-    deterministic stub, so the DuckDB gate fixture (fake-PNG bytes)
-    reproduces exactly while genuine images get genuine dimensions."""
+    Every payload takes the deterministic stub (``_fake_decode``); ``kind``
+    is the magic-sniffed name, so the DuckDB gate fixture reproduces
+    exactly."""
     src = df.select(F.col(key_col).alias("key"), F.col(payload_col).alias("payload"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -159,23 +105,7 @@ def decode_image_batches(
                 kind = next(
                     (n for m, n in MAGIC.items() if raw.startswith(m)), "unknown"
                 )
-                if kind == "png":
-                    try:
-                        w, h, c, f = _real_decode_png(raw)
-                    except Exception:
-                        w, h, c, f = _fake_decode(raw)
-                elif kind == "gif":
-                    try:
-                        w, h, c, f = _real_decode_gif(raw)
-                    except Exception:
-                        w, h, c, f = _fake_decode(raw)
-                elif kind == "jpeg":
-                    try:
-                        w, h, c, f = _real_decode_jpeg(raw)
-                    except Exception:
-                        w, h, c, f = _fake_decode(raw)
-                else:
-                    w, h, c, f = _fake_decode(raw)
+                w, h, c, f = _fake_decode(raw)
                 out["key"].append(key)
                 out["kind"].append(kind)
                 out["width"].append(w)
@@ -187,105 +117,6 @@ def decode_image_batches(
     return src.mapInPandas(kernel, DECODE_SCHEMA)
 
 
-AUDIO_SCHEMA = (
-    "key long, kind string, sample_rate int, n_channels int, n_frames long,"
-    " duration_s double, rms double"
-)
-
-
-def _fake_audio(raw: bytes) -> tuple[int, int, int, float, float]:
-    """STUB for non-parsing audio payloads: md5-derived deterministic
-    (sample_rate, channels, frames, duration, rms)."""
-    h = hashlib.md5(raw or b"").digest()
-    sr = (8000, 16000, 22050, 44100)[h[0] % 4]
-    ch = 1 + h[1] % 2
-    frames = 1000 + int.from_bytes(h[2:5], "big") % 100000
-    return sr, ch, frames, round(frames / sr, 6), round(h[5] / 255.0, 6)
-
-
-def decode_audio_batches(
-    df: DataFrame, key_col: str = "key", payload_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas audio decode. RIFF/WAVE PCM payloads decode FOR REAL
-    via the stdlib ``wave`` module (sample rate, channels, frame count,
-    duration, RMS of the int16 samples — no external codec needed); MP3
-    payloads get REAL FRAMING metadata (sample rate, channels, frame
-    count, duration from a strict back-to-back frame walk —
-    operators/mp3.py) with rms = 0.0, since PCM synthesis needs a codec
-    this container lacks; anything else (ogg/non-parsing fixtures) falls
-    back to the deterministic stub. Same dispatch discipline as
-    decode_image's PNG path."""
-    src = df.select(F.col(key_col).alias("key"), F.col(payload_col).alias("payload"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
-
-        import numpy as np
-
-        from .mp3 import parse_mp3
-
-        for b in batches:
-            out = {
-                "key": [], "kind": [], "sample_rate": [], "n_channels": [],
-                "n_frames": [], "duration_s": [], "rms": [],
-            }
-            for key, payload in zip(b["key"], b["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                kind = next(
-                    (n for m, n in MAGIC.items() if raw.startswith(m)), "unknown"
-                )
-                sr = ch = frames = None
-                if kind == "riff":
-                    try:
-                        with wave.open(io.BytesIO(raw)) as wf:
-                            sr = wf.getframerate()
-                            ch = wf.getnchannels()
-                            frames = wf.getnframes()
-                            width = wf.getsampwidth()
-                            data = wf.readframes(frames)
-                        if width == 2 and data:
-                            samples = np.frombuffer(data, dtype="<i2")
-                            rms = round(
-                                float(
-                                    np.sqrt(np.mean((samples / 32768.0) ** 2))
-                                ),
-                                6,
-                            )
-                        else:
-                            rms = 0.0
-                        dur = round(frames / sr, 6) if sr else 0.0
-                        kind = "wav"
-                    except Exception:
-                        sr = None
-                if sr is None and (
-                    raw[:3] == b"ID3"
-                    or (len(raw) > 1 and raw[0] == 0xFF and raw[1] & 0xE0 == 0xE0)
-                ):
-                    try:
-                        meta = parse_mp3(raw)
-                        sr = meta["sample_rate"]
-                        ch = meta["n_channels"]
-                        frames = meta["n_frames"]
-                        dur = meta["duration_s"]
-                        rms = 0.0  # PCM synthesis needs a codec — framing only
-                        kind = "mp3"
-                    except Exception:
-                        sr = None
-                if sr is None:
-                    sr, ch, frames, dur, rms = _fake_audio(raw)
-                out["key"].append(key)
-                out["kind"].append(kind)
-                out["sample_rate"].append(sr)
-                out["n_channels"].append(ch)
-                out["n_frames"].append(frames)
-                out["duration_s"].append(dur)
-                out["rms"].append(rms)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(kernel, AUDIO_SCHEMA)
-
-
 def frame_sample(
     df: DataFrame,
     every_n: int = 10,
@@ -294,60 +125,21 @@ def frame_sample(
     payload_col: str = "payload",
 ) -> DataFrame:
     """Frame sampler: every ``every_n``-th frame, at most ``max_frames``
-    per payload; fan-out inside the Arrow batch. Payloads that parse as
-    REAL (animated) GIFs sample ACTUAL composited frames — frame_md5 is
-    the md5 of the frame's RGB canvas bytes, so two visually-identical
-    frames dedup — via the pure-stdlib LZW codec (operators/gif.py);
-    payloads that parse as REAL progressive MP4s sample actual VIDEO
-    SAMPLES via the container's stbl tables (operators/mp4.py) —
-    frame_md5 is the md5 of the sample's compressed payload, the bytes a
-    pipeline ships to a GPU decode stage. Anything else (webm/fragmented
-    mp4 — and magic-only fixtures) keeps the deterministic stub, so the
+    per payload; fan-out inside the Arrow batch. STUB: the frame count
+    and each frame_md5 are md5-derived from the payload bytes, so the
     DuckDB gate fixture reproduces exactly."""
     src = df.select(F.col(key_col).alias("key"), F.col(payload_col).alias("payload"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .gif import decode_gif
-        from .mp4 import video_samples
-
         for b in batches:
             keys, idxs, md5s = [], [], []
             for key, payload in zip(b["key"], b["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                rows = None
-                if raw.startswith(b"GIF8"):
-                    try:
-                        # decode only as far as the last sampled index
-                        _, _, frames = decode_gif(
-                            raw, max_frames=(max_frames - 1) * every_n + 1
-                        )
-                        rows = [
-                            (fi, hashlib.md5(frames[fi].tobytes()).hexdigest())
-                            for fi in range(0, len(frames), every_n)
-                        ][:max_frames]
-                    except Exception:  # malformed/fixture bytes → stub
-                        rows = None
-                elif raw[4:8] == b"ftyp":
-                    try:
-                        _, samples = video_samples(raw)
-                        rows = [
-                            (fi, hashlib.md5(samples[fi]).hexdigest())
-                            for fi in range(0, len(samples), every_n)
-                        ][:max_frames]
-                    except Exception:  # malformed/fixture bytes → stub
-                        rows = None
-                if rows is None:  # stub: md5-derived fake frame ids
-                    n_frames = 1 + (
-                        hashlib.md5(raw).digest()[3] % (every_n * max_frames)
-                    )
-                    rows = [
-                        (fi, hashlib.md5(raw + fi.to_bytes(4, "big")).hexdigest())
-                        for fi in range(0, n_frames, every_n)
-                    ][:max_frames]
-                for fi, m in rows:
+                n_frames = 1 + (hashlib.md5(raw).digest()[3] % (every_n * max_frames))
+                for fi in range(0, n_frames, every_n)[:max_frames]:
                     keys.append(key)
                     idxs.append(fi)
-                    md5s.append(m)
+                    md5s.append(hashlib.md5(raw + fi.to_bytes(4, "big")).hexdigest())
             yield pd.DataFrame({"key": keys, "frame_idx": idxs, "frame_md5": md5s})
 
     return src.mapInPandas(kernel, FRAME_SCHEMA)
