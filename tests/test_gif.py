@@ -1,158 +1,16 @@
-"""Pure-stdlib GIF codec (operators/gif.py) + its multimodal wiring:
-round trips, LZW table growth, transparency/disposal compositing, and
-the real-animated-frame sampling path of frame_sample."""
+"""GIF-magic payloads in the multimodal kernels: frame_sample keeps the
+deterministic md5 stub."""
 
 from __future__ import annotations
 
 import hashlib
 
-import numpy as np
-import pytest
-
-from webgraph_ans_rs_spark.operators.gif import (
-    _lzw_decode,
-    decode_gif,
-    encode_gif,
-)
-
-PAL4 = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (10, 20, 30)]
-
-
-def _rgb(frame_idx, pal=PAL4):
-    return np.array(pal, dtype=np.uint8)[frame_idx]
-
-
-def test_roundtrip_multiframe():
-    f0 = np.arange(16, dtype=np.uint8).reshape(4, 4) % 4
-    f1 = (f0 + 1) % 4
-    raw = encode_gif([f0, f1], PAL4)
-    w, h, frames = decode_gif(raw)
-    assert (w, h, len(frames)) == (4, 4, 2)
-    assert (frames[0] == _rgb(f0)).all()
-    assert (frames[1] == _rgb(f1)).all()
-
-
-def test_lzw_decode_inverts_real_compressor():
-    """The decoder must handle GROWING code tables and the cScSc corner
-    (code == len(table)), which the trivial fixture encoder never emits —
-    cross-check against a from-scratch classic LZW compressor."""
-
-    def lzw_compress(mcs, data: bytes) -> bytes:
-        clear, eoi = 1 << mcs, (1 << mcs) + 1
-        table = {bytes([i]): i for i in range(clear)}
-        next_code = eoi + 1
-        code_size = mcs + 1
-        acc = nbits = 0
-        out = bytearray()
-
-        def emit(code, size):
-            nonlocal acc, nbits
-            acc |= code << nbits
-            nbits += size
-            while nbits >= 8:
-                out.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-
-        emit(clear, code_size)
-        cur = b""
-
-        def emit_data(code):
-            # giflib order: write at the CURRENT width, then bump when the
-            # assigned-codes counter has reached capacity, then insert
-            nonlocal code_size
-            emit(code, code_size)
-            if next_code >= (1 << code_size) and code_size < 12:
-                code_size += 1
-
-        for ch in data:
-            nxt = cur + bytes([ch])
-            if nxt in table:
-                cur = nxt
-            else:
-                emit_data(table[cur])
-                if next_code < 4096:
-                    table[nxt] = next_code
-                    next_code += 1
-                cur = nxt[-1:]
-        if cur:
-            emit_data(table[cur])
-        emit(eoi, code_size)
-        if nbits:
-            out.append(acc & 0xFF)
-        return bytes(out)
-
-    rng = np.random.RandomState(7)
-    for data in (
-        b"\x00\x00\x00\x00",  # cScSc pattern territory
-        bytes(rng.randint(0, 4, 500, dtype=np.uint8)),
-        bytes([0, 1] * 300),
-        bytes(rng.randint(0, 2, 2000, dtype=np.uint8)),
-    ):
-        got = _lzw_decode(2, lzw_compress(2, data), len(data))
-        assert bytes(got) == data
-
-
-def test_transparency_composites_over_previous_frame():
-    f0 = np.zeros((3, 3), dtype=np.uint8)
-    f1 = np.full((3, 3), 2, dtype=np.uint8)
-    f1[1, 1] = 1  # transparent pixel
-    raw = encode_gif([f0, f1], PAL4, transparent=1)
-    _, _, frames = decode_gif(raw)
-    want = _rgb(f1).copy()
-    want[1, 1] = PAL4[0]  # shows frame 0's red through the hole
-    assert (frames[1] == want).all()
-
-
-def test_disposal_restore_to_background():
-    """disposal=2: after each frame, its region resets to the background
-    color, so frame N+1's transparent holes show BACKGROUND, not frame N."""
-    f0 = np.full((2, 2), 3, dtype=np.uint8)
-    f1 = np.full((2, 2), 1, dtype=np.uint8)
-    f1[0, 0] = 2  # transparent under transparent=2
-    raw = encode_gif([f0, f1], PAL4, transparent=2, disposal=2)
-    _, _, frames = decode_gif(raw)
-    want = _rgb(f1).copy()
-    want[0, 0] = PAL4[0]  # background index 0 (red), NOT frame 0's color
-    assert (frames[1] == want).all()
-
-
-def test_malformed_inputs_raise():
-    raw = encode_gif([np.zeros((2, 2), dtype=np.uint8)], PAL4)
-    with pytest.raises(ValueError):
-        decode_gif(b"GIF89a" + b"\x01" * 20)  # garbage body
-    with pytest.raises(ValueError):
-        decode_gif(raw[:-5])  # truncated
-    with pytest.raises(ValueError):
-        decode_gif(b"NOTGIF" + raw[6:])
-
-
-def test_frame_sample_real_animated_gif(spark):
-    """frame_sample on a REAL 12-frame GIF: samples frames 0 and 10 with
-    md5s of the actual composited RGB canvases."""
-    from webgraph_ans_rs_spark.operators.multimodal import frame_sample
-
-    frames = [
-        np.full((4, 4), i % 4, dtype=np.uint8) for i in range(12)
-    ]
-    raw = encode_gif(frames, PAL4)
-    df = spark.createDataFrame([(1, bytearray(raw))], "key long, payload binary")
-    got = {
-        (r.frame_idx, r.frame_md5)
-        for r in frame_sample(df, every_n=10, max_frames=5).collect()
-    }
-    _, _, dec = decode_gif(raw)
-    want = {
-        (fi, hashlib.md5(dec[fi].tobytes()).hexdigest()) for fi in (0, 10)
-    }
-    assert got == want
+from webgraph_ans_rs_spark.operators.multimodal import frame_sample
 
 
 def test_frame_sample_magic_only_fixture_keeps_stub(spark):
     """A payload with the GIF magic but no valid body must fall back to
     the deterministic stub — the gate-fixture compatibility contract."""
-    from webgraph_ans_rs_spark.operators.multimodal import frame_sample
-
     raw = b"GIF89a" + hashlib.md5(b"fixture").digest() * 3
     df = spark.createDataFrame([(7, bytearray(raw))], "key long, payload binary")
     got = {
@@ -165,16 +23,3 @@ def test_frame_sample_magic_only_fixture_keeps_stub(spark):
         for fi in range(0, n_frames, 10)
     }
     assert got == set(list(sorted(want))[:5])
-
-
-def test_decode_image_real_gif(spark):
-    from webgraph_ans_rs_spark.operators.multimodal import decode_image_batches
-
-    fr = np.arange(64, dtype=np.uint8).reshape(8, 8) % 4
-    raw = encode_gif([fr], PAL4)
-    df = spark.createDataFrame([(3, bytearray(raw))], "key long, payload binary")
-    row = decode_image_batches(df).collect()[0]
-    assert (row.kind, row.width, row.height, row.n_channels) == ("gif", 8, 8, 3)
-    a = _rgb(fr).astype("float64") / 255.0
-    assert row.features[0] == pytest.approx(round(float(a[:, :, 0].mean()), 6))
-    assert row.features[1] == pytest.approx(round(float(a[:, :, 0].std()), 6))

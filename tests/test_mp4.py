@@ -1,78 +1,18 @@
-"""ISO BMFF (MP4) container parser (operators/mp4.py) + its frame_sample
-wiring: sample-table frame extraction, timing, metadata, and the strict
-parse-or-stub dispatch."""
+"""MP4 (ISO BMFF) payloads in the multimodal kernels: attach_payload_meta
+sniffs the ``ftyp`` box and frame_sample keeps the deterministic md5 stub."""
 
 from __future__ import annotations
 
 import hashlib
+import struct
 
-import pytest
-
-from webgraph_ans_rs_spark.operators.mp4 import (
-    build_mp4_fixture,
-    parse_mp4,
-    video_samples,
+from webgraph_ans_rs_spark.operators.multimodal import (
+    attach_payload_meta,
+    frame_sample,
 )
 
 
-def _frames(n=9):
-    return [bytes([i] * (10 + 3 * i)) for i in range(n)]
-
-
-def test_sample_tables_recover_exact_frame_payloads():
-    frames = _frames()
-    raw = build_mp4_fixture(frames, samples_per_chunk=2)
-    vid, samples = video_samples(raw)
-    assert samples == frames  # byte-exact via stsc/stco/stsz walking
-    assert [s["t"] for s in vid["samples"]] == [40 * i for i in range(9)]
-    assert (vid["codec"], vid["width"], vid["height"]) == ("avc1", 64, 48)
-
-
-def test_parse_meta():
-    raw = build_mp4_fixture(_frames(5), width=320, height=240,
-                            timescale=600, frame_delta=20)
-    meta = parse_mp4(raw)
-    assert meta["brand"] == "isom"
-    assert meta["duration_s"] == pytest.approx(5 * 20 / 600)
-    (t,) = meta["tracks"]
-    assert t["handler"] == "vide" and (t["width"], t["height"]) == (320, 240)
-
-
-def test_malformed_and_fragmented_raise():
-    raw = build_mp4_fixture(_frames(3))
-    with pytest.raises(ValueError):
-        parse_mp4(raw[:50])
-    with pytest.raises(ValueError):
-        parse_mp4(b"\x00\x00\x00\x08ftypisom")  # ftyp only, no moov
-    with pytest.raises(ValueError, match="ftyp"):
-        parse_mp4(b"plain text that is not a container")
-    # a moof box anywhere → fragmented → honest raise
-    moof = b"\x00\x00\x00\x08moof"
-    with pytest.raises(ValueError, match="fragmented"):
-        parse_mp4(raw + moof)
-
-
-def test_frame_sample_real_mp4(spark):
-    """frame_sample on a real progressive MP4: every 4th video sample,
-    md5 of the actual compressed sample bytes."""
-    from webgraph_ans_rs_spark.operators.multimodal import frame_sample
-
-    frames = _frames(9)
-    raw = build_mp4_fixture(frames)
-    df = spark.createDataFrame([(5, bytearray(raw))], "key long, payload binary")
-    got = {
-        (r.frame_idx, r.frame_md5)
-        for r in frame_sample(df, every_n=4, max_frames=5).collect()
-    }
-    want = {
-        (i, hashlib.md5(frames[i]).hexdigest()) for i in (0, 4, 8)
-    }
-    assert got == want
-
-
 def test_frame_sample_magic_only_mp4_keeps_stub(spark):
-    from webgraph_ans_rs_spark.operators.multimodal import frame_sample
-
     raw = b"\x00\x00\x00\x08" + b"ftyp" + hashlib.md5(b"v").digest()
     df = spark.createDataFrame([(2, bytearray(raw))], "key long, payload binary")
     got = {
@@ -88,9 +28,8 @@ def test_frame_sample_magic_only_mp4_keeps_stub(spark):
 
 
 def test_payload_meta_sniffs_mp4(spark):
-    from webgraph_ans_rs_spark.operators.multimodal import attach_payload_meta
-
-    raw = build_mp4_fixture(_frames(2))
+    # ISO BMFF: a 16-byte ftyp box, its magic at byte offset 4
+    raw = struct.pack(">I", 16) + b"ftypisom" + struct.pack(">I", 512)
     df = spark.createDataFrame(
         [(1, bytearray(raw)), (2, bytearray(b"GIF89a123"))],
         "key long, payload binary",
@@ -99,44 +38,3 @@ def test_payload_meta_sniffs_mp4(spark):
         r.key: r.payload_kind for r in attach_payload_meta(df).collect()
     }
     assert kinds == {1: "mp4", 2: "gif"}
-
-
-# ---- MP3 framing (operators/mp3.py) — the audio analogue of the MP4
-# container parser: real framing metadata, PCM stays a labeled stub ----
-
-
-def test_mp3_frame_walk_recovers_stream_parameters():
-    from webgraph_ans_rs_spark.operators.mp3 import build_mp3_fixture, parse_mp3
-
-    raw = build_mp3_fixture(n_frames=7, kbps_idx=9, sr_idx=0)  # 128k/44100
-    meta = parse_mp3(raw)
-    assert meta["sample_rate"] == 44100 and meta["layer"] == 3
-    assert meta["n_frames"] == 7 and meta["n_channels"] == 2
-    assert meta["duration_s"] == pytest.approx(7 * 1152 / 44100, abs=1e-6)
-    assert meta["avg_kbps"] == 128
-    mono = parse_mp3(build_mp3_fixture(n_frames=3, mono=True, id3v2=True))
-    assert mono["n_channels"] == 1 and mono["n_frames"] == 3
-
-
-def test_mp3_strictness_rejects_non_streams():
-    from webgraph_ans_rs_spark.operators.mp3 import build_mp3_fixture, parse_mp3
-
-    raw = build_mp3_fixture(n_frames=4)
-    with pytest.raises(ValueError):
-        parse_mp3(raw[:-10])  # truncated final frame
-    with pytest.raises(ValueError):
-        parse_mp3(b"\xff\xe3" + hashlib.md5(b"a").digest() * 8)  # sync, junk
-    with pytest.raises(ValueError, match="fewer than 2"):
-        parse_mp3(build_mp3_fixture(n_frames=1))
-
-
-def test_decode_audio_real_mp3_framing(spark):
-    from webgraph_ans_rs_spark.operators.mp3 import build_mp3_fixture
-    from webgraph_ans_rs_spark.operators.multimodal import decode_audio_batches
-
-    raw = build_mp3_fixture(n_frames=5)
-    df = spark.createDataFrame([(4, bytearray(raw))], "key long, payload binary")
-    row = decode_audio_batches(df).collect()[0]
-    assert row.kind == "mp3" and row.sample_rate == 44100
-    assert row.n_frames == 5 and row.rms == 0.0
-    assert row.duration_s == pytest.approx(5 * 1152 / 44100, abs=1e-6)
