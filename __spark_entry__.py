@@ -478,11 +478,6 @@ def _q_harmonic_exact(spark, sf_dir):
     return harmonic_centrality_exact(edges, verts, NF_MAX_T)
 
 
-def _q_cosine_topk(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim.cosine_topk(emb, SIM_QUERY_IDS)
-
-
 def _q_cosine_neardup(spark, sf_dir):
     """Banded-LSH near-dup over the deterministically enriched embedding
     set (testdata has no true near-dups) — the scale-safe plan; the
@@ -510,15 +505,6 @@ def _q_sessionize(spark, sf_dir):
     from webgraph_ans_rs_spark.streaming.windows import sessionize
 
     return sessionize(load_table(spark, sf_dir, "events"), gap="30 minutes")
-
-
-def _q_lsh_topk(spark, sf_dir):
-    """Approximate ANN — but the approximation is a deterministic function
-    of the data (fixed ±1 hyperplanes, single-bucket candidates), so the
-    oracle reproduces it exactly; recall vs brute force is property-tested
-    separately in pytest."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return sim.lsh_topk(emb, SIM_QUERY_IDS)
 
 
 ANN_METHOD_TAGS = ("exact", "lsh", "ivf")

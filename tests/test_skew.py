@@ -2,52 +2,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from webgraph_ans_rs_spark.functions.skew import hot_keys, salted_count, salted_join
-
-
-def _skewed(spark, n=5000, hub=7):
-    # 60% of rows hit the hub key
-    rows = [(hub if i % 5 < 3 else i % 97, i) for i in range(n)]
-    return spark.createDataFrame(rows, "k long, payload long")
-
-
-def test_hot_keys(spark):
-    df = _skewed(spark)
-    hot = {r.k for r in hot_keys(df, "k", min_count=1000).collect()}
-    assert hot == {7}
-
-
-def test_salted_join_equals_plain_join(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame([(k, f"v{k}") for k in range(100)], "k long, v string")
-    hot = hot_keys(big, "k", min_count=1000)
-    plain = {(r.k, r.payload, r.v) for r in big.join(small, "k").collect()}
-    salted = {(r.k, r.payload, r.v) for r in salted_join(big, small, "k", hot).collect()}
-    assert salted == plain
-
-
-def test_salted_join_spreads_hot_key(spark):
-    big = _skewed(spark)
-    small = spark.createDataFrame([(k, f"v{k}") for k in range(100)], "k long, v string")
-    hot = hot_keys(big, "k", min_count=1000)
-    # internal check: the salted big side distributes hub rows over >1 salt
-    hot_flag = F.broadcast(hot.withColumn("_hot", F.lit(True)))
-    salts = (
-        big.join(hot_flag, "k")
-        .withColumn("_salt", F.pmod(F.xxhash64("k", "payload"), F.lit(16)))
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert salts > 8
-
-
-def test_salted_count_matches(spark):
-    df = _skewed(spark)
-    plain = {r.k: r["count"] for r in df.groupBy("k").count().collect()}
-    salted = {r.k: r["count"] for r in salted_count(df, "k").collect()}
-    assert salted == plain
-
 
 def test_csr_segments_partition_hub_lists(spark):
     """Segmented CSR must cover exactly the same edges as the plain CSR,

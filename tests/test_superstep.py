@@ -30,9 +30,10 @@ from webgraph_ans_rs_spark.operators.pagerank import (
 )
 from webgraph_ans_rs_spark.operators.sampling import khop_neighbors
 from webgraph_ans_rs_spark.operators.scc import strongly_connected_components
+from webgraph_ans_rs_spark.operators.superstep import COALESCE, conf_scope
 from webgraph_ans_rs_spark.plans.derived_graph import undirected_symmetrize
 
-COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+AQE = "spark.sql.adaptive.enabled"
 
 
 def _count_nodes(jplan, name: str) -> int:
@@ -62,17 +63,15 @@ def test_superstep_plan_shape(spark, kind, want):
     sides: (Exchange, Sort, ShuffledHashJoin) counts of the executed plan
     with AQE off, so the static tree is walkable."""
     edges, verts, _, _ = seeded_random_graph(spark)
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     caches: list = []
     try:
-        jplan = _probe(kind, edges, verts, caches)._jdf.queryExecution().executedPlan()
-        got = tuple(
-            _count_nodes(jplan, name)
-            for name in ("Exchange", "Sort", "ShuffledHashJoin")
-        )
+        with conf_scope(spark, AQE, "false"):
+            jplan = _probe(kind, edges, verts, caches)._jdf.queryExecution().executedPlan()
+            got = tuple(
+                _count_nodes(jplan, name)
+                for name in ("Exchange", "Sort", "ShuffledHashJoin")
+            )
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
         for c in caches:
             c.unpersist(blocking=True)
     assert got == want
@@ -136,15 +135,13 @@ def test_hyperball_superstep_exchange_count(spark, layout, want):
     regroup by vertex. Packed layout: the mapInArrow fold's output does
     not carry its input's partitioning, so the V-sized registers are
     exchanged into the join as well as regrouped — two."""
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     side = None
     try:
-        side, df = _steady_superstep(spark, layout)
-        jplan = df._jdf.queryExecution().executedPlan()
-        got = tuple(_count_nodes(jplan, name) for name in ("Exchange", "Sort"))
+        with conf_scope(spark, AQE, "false"):
+            side, df = _steady_superstep(spark, layout)
+            jplan = df._jdf.queryExecution().executedPlan()
+            got = tuple(_count_nodes(jplan, name) for name in ("Exchange", "Sort"))
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
         if side is not None:
             side.unpersist(blocking=True)
     assert got == want
@@ -235,17 +232,10 @@ def test_kernel_releases_caches_and_restores_conf(spark, tiny_graph, case, prior
     coalescing flag as it found it — also when it raises."""
     edges, verts = tiny_graph
     seeds = verts.where(F.col("vertex").isin(0, 3))
-    prev = spark.conf.get(COALESCE, None)
-    spark.conf.set(COALESCE, prior)
-    try:
+    with conf_scope(spark, COALESCE, prior):
         start = _cached_rdds(spark)
         out = CASES[case](edges, verts, seeds)
         if out is not None:
             out.collect()
         assert _cached_rdds(spark) == start
         assert spark.conf.get(COALESCE) == prior
-    finally:
-        if prev is None:
-            spark.conf.unset(COALESCE)
-        else:
-            spark.conf.set(COALESCE, prev)

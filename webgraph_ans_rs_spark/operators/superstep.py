@@ -26,9 +26,10 @@ distribution and the shuffle_hash hint (build = V-sized scores) removes
 the SortMergeJoin sorts, so a superstep plans exactly ONE exchange: the
 gather (tests/test_superstep.py asserts the counts).
 
-``cache_scope`` is the one cache mechanism of the loop kernels: HyperBall
-and label propagation use it alone, ``kernel_scope`` adds the coalescing
-suspension the scatter–gather kernels need.
+``cache_scope`` is the one cache mechanism of the loop kernels and
+``conf_scope`` the one session-conf override: HyperBall and label
+propagation use ``cache_scope`` alone, ``kernel_scope`` adds the
+coalescing suspension the scatter–gather kernels need.
 """
 
 from __future__ import annotations
@@ -68,17 +69,28 @@ def cache_scope(release_caches: list | None = None):
 
 
 @contextmanager
+def conf_scope(spark, key: str, value: str):
+    """Set session conf ``key`` to ``value`` for the block. On exit —
+    failure included — the previous value is restored, or the key is
+    unset if it was unset before."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+@contextmanager
 def kernel_scope(spark, release_caches: list | None = None):
     """``cache_scope`` with AQE partition coalescing suspended, so the
     gather's groupBy keeps the P-way partitioning the next scatter join
     relies on; the flag is restored on exit, failure included."""
-    prev = spark.conf.get(COALESCE, "true")
-    spark.conf.set(COALESCE, "false")
-    try:
-        with cache_scope(release_caches) as cache:
-            yield cache
-    finally:
-        spark.conf.set(COALESCE, prev)
+    with conf_scope(spark, COALESCE, "false"), cache_scope(release_caches) as cache:
+        yield cache
 
 
 def build_csr(

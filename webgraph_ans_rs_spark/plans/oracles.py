@@ -34,24 +34,6 @@ def _clustered_ctes() -> str:
     )
 
 
-def outdegree_sql() -> str:
-    return (
-        f"WITH {_graph_ctes()}\n"
-        f"SELECT v.vertex, CAST(COALESCE(c.cnt, 0) AS BIGINT) AS outdeg\n"
-        f"FROM verts v LEFT JOIN (SELECT src AS vertex, COUNT(*) AS cnt FROM edges GROUP BY 1) c"
-        f" USING (vertex)"
-    )
-
-
-def indegree_sql() -> str:
-    return (
-        f"WITH {_graph_ctes()}\n"
-        f"SELECT v.vertex, CAST(COALESCE(c.cnt, 0) AS BIGINT) AS indeg\n"
-        f"FROM verts v LEFT JOIN (SELECT dst AS vertex, COUNT(*) AS cnt FROM edges GROUP BY 1) c"
-        f" USING (vertex)"
-    )
-
-
 def degree_distribution_sql() -> str:
     return (
         f"WITH {_graph_ctes()},\n"
@@ -86,15 +68,6 @@ def successors_layouts_sql(tags: tuple[str, ...]) -> str:
         f"base AS (SELECT src AS vertex,"
         f" string_agg(CAST(dst AS VARCHAR), ',' ORDER BY dst) AS succs"
         f" FROM edges GROUP BY src)\n" + unions
-    )
-
-
-def successors_of_sql(u: int) -> str:
-    return (
-        f"WITH {_graph_ctes()}\n"
-        f"SELECT src AS vertex,"
-        f" string_agg(CAST(dst AS VARCHAR), ',' ORDER BY dst) AS succs\n"
-        f"FROM edges WHERE src = {u} GROUP BY src"
     )
 
 
@@ -320,16 +293,6 @@ def label_propagation_modes_sql(num_iter: int = 2, max_iter: int = 8) -> str:
         f" FROM ({label_propagation_sql(num_iter)})"
         f" UNION ALL SELECT 'converged' AS mode, vertex, label, iters"
         f" FROM ({label_propagation_converged_sql(max_iter)})"
-    )
-
-
-def triangle_count_sql() -> str:
-    return (
-        f"WITH {_graph_ctes()},\n"
-        f"o AS (SELECT src AS a, dst AS b FROM und WHERE src < dst)\n"
-        f"SELECT COUNT(*) AS n_triangles FROM o e1"
-        f" JOIN o e2 ON e2.a = e1.b"
-        f" JOIN o e3 ON e3.a = e1.a AND e3.b = e2.b"
     )
 
 

@@ -472,19 +472,6 @@ def events_hourly_sql() -> str:
     )
 
 
-def cosine_neardup_sql(threshold: float = 0.95) -> str:
-    """All-pairs form — small-N cross-check oracle for the quadratic
-    building block (kept for pytest; not a driver-gate query)."""
-    return (
-        f"WITH {_emb_cte()}\n"
-        "SELECT a, b, cos FROM ("
-        "SELECT x.vec_id AS a, y.vec_id AS b,"
-        f" ROUND({_cos('x.v', 'y.v')}, 6) AS cos"
-        " FROM e x JOIN e y ON x.vec_id < y.vec_id)"
-        f" WHERE cos >= {threshold}"
-    )
-
-
 def _enriched_emb_cte(dup_mod: int, dup_offset: int, delta: float) -> str:
     """Near-dup-enriched embedding set — mirrors
     operators/similarity.py neardup_enriched_embeddings."""

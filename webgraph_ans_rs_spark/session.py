@@ -16,6 +16,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM, at least 2g and at most 16g: the driver
+    JVM of one session must leave room for a second one on the same host."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, max(2 * 1024, ram_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "webgraph-ans-rs-spark",
     master: str | None = None,
@@ -52,12 +59,15 @@ def get_spark(
         # distribution: the planner's auto-disable also forfeits bucket
         # PRUNING, which is the whole point of the bucketed adjacency table
         # (successors(u) point lookups read 1 bucket, the EF-pointer-index
-        # analogue — plan_audit check 8 asserts SelectedBucketsCount)
+        # analogue — tests/test_adjacency_io.py asserts SelectedBucketsCount)
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        )
         # G1 collapses with 32 task threads in one local JVM (measured 97s
         # vs 64s with ParallelGC on the same 5-superstep PageRank); on a
         # real cluster executors run few cores each and this is moot.

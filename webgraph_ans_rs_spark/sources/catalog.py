@@ -17,7 +17,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,21 +32,27 @@ class VersionedTable:
 
     # -- write -------------------------------------------------------------
     def commit(self, df: DataFrame, properties: dict | None = None) -> int:
-        """Write a new immutable snapshot; returns its id.
+        """Write a new immutable snapshot; returns its id."""
+        sid, data_dir = self._land(df)
+        rows = self.spark.read.parquet(data_dir).count()
+        return self._write_manifest(sid, data_dir, df.schema, rows, properties)
 
-        Crash-safety: data lands in a unique temp dir and is renamed to its
-        snap-NNNNNN home just before the manifest commit, and ``_next_id``
-        counts orphaned snap dirs (data renamed, manifest never written) as
-        taken — a crash can orphan at most one uuid-temp or snap dir, never
-        wedge future commits by id reuse.
+    def _land(self, df: DataFrame, partition_col: str | None = None) -> tuple[int, str]:
+        """Write ``df`` (partitioned by ``partition_col`` if given) into a
+        unique temp dir and rename it to the next snap-NNNNNN dir; returns
+        (snapshot id, data dir).
+
+        Crash-safety: the rename happens just before the manifest commit,
+        and ``_next_id`` counts orphaned snap dirs (data renamed, manifest
+        never written) as taken — a crash can orphan at most one uuid-temp
+        or snap dir, never wedge future commits by id reuse.
         """
-        import shutil
-        import uuid
-
+        writer = df.write.mode("errorifexists")
+        if partition_col is not None:
+            writer = writer.partitionBy(partition_col)
         tmp_data = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}")
         try:
-            df.write.mode("errorifexists").parquet(tmp_data)
-            rows = self.spark.read.parquet(tmp_data).count()
+            writer.parquet(tmp_data)
             sid = self._next_id()
             data_dir = os.path.join(self.dir, f"snap-{sid:06d}")
             os.rename(tmp_data, data_dir)
@@ -52,20 +60,7 @@ class VersionedTable:
             # a failed write must not accumulate orphaned .tmp dirs forever
             shutil.rmtree(tmp_data, ignore_errors=True)
             raise
-        manifest = {
-            "snapshot_id": sid,
-            "data_dir": data_dir,
-            "schema": df.schema.jsonValue(),
-            "rows": rows,
-            "committed_at": time.time(),
-            "properties": properties or {},
-        }
-        tmp = os.path.join(self.dir, f".manifest-{sid:06d}.tmp")
-        final = os.path.join(self.dir, f"manifest-{sid:06d}.json")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.rename(tmp, final)  # atomic commit point
-        return sid
+        return sid, data_dir
 
     # -- read --------------------------------------------------------------
     def snapshots(self) -> list[int]:
@@ -113,18 +108,7 @@ class VersionedTable:
     ) -> int:
         """Full snapshot in bucket-partitioned layout. ``df`` must carry an
         integer ``partition_col``; rows land under ``bucket=K/`` leaves."""
-        import shutil
-        import uuid
-
-        tmp_data = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}")
-        try:
-            df.write.mode("errorifexists").partitionBy(partition_col).parquet(tmp_data)
-            sid = self._next_id()
-            data_dir = os.path.join(self.dir, f"snap-{sid:06d}")
-            os.rename(tmp_data, data_dir)
-        except BaseException:
-            shutil.rmtree(tmp_data, ignore_errors=True)
-            raise
+        sid, data_dir = self._land(df, partition_col)
         parts = self._leaf_dirs(data_dir, partition_col)
         rows = self.spark.read.parquet(data_dir).count() if parts else 0
         return self._write_manifest(
@@ -144,25 +128,12 @@ class VersionedTable:
         contents of the ``replaced`` partition values; every other
         partition is inherited from ``base_snapshot`` (default: latest)
         WITHOUT copying bytes. Iceberg `REPLACE PARTITIONS` semantics."""
-        import shutil
-        import uuid
-
         base = self.manifest(base_snapshot)
         if "partitions" not in base:
             raise ValueError("base snapshot is not partitioned")
         if base.get("partition_col") != partition_col:
             raise ValueError("partition_col mismatch with base snapshot")
-        tmp_data = os.path.join(self.dir, f".tmp-{uuid.uuid4().hex}")
-        try:
-            df_partial.write.mode("errorifexists").partitionBy(partition_col).parquet(
-                tmp_data
-            )
-            sid = self._next_id()
-            data_dir = os.path.join(self.dir, f"snap-{sid:06d}")
-            os.rename(tmp_data, data_dir)
-        except BaseException:
-            shutil.rmtree(tmp_data, ignore_errors=True)
-            raise
+        sid, data_dir = self._land(df_partial, partition_col)
         new_parts = self._leaf_dirs(data_dir, partition_col)
         stray = set(new_parts) - {str(k) for k in replaced}
         if stray:
@@ -284,8 +255,6 @@ class VersionedTable:
         Manifests are removed first, so a crash mid-expiry leaves orphaned
         data (tolerated by ``_next_id``), never a manifest pointing at
         deleted data. Returns the expired ids."""
-        import shutil
-
         sids = self.snapshots()
         expired = sids[:-keep_last] if keep_last > 0 else sids
         kept = [s for s in sids if s not in expired]

@@ -78,24 +78,3 @@ def sessionize(
             "n_events",
         )
     )
-
-
-def stream_from_directory(spark, path: str, schema) -> DataFrame:
-    """File-source stream: incrementally picks up new parquet files — the
-    ingestion shape for a crawl landing zone."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
-def run_stream_to_memory(stream_df: DataFrame, name: str, timeout_sec: float = 60.0):
-    """Drive a streaming query into an in-memory sink until idle (test/demo
-    helper); returns the query handle (stopped)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout_sec)
-    q.stop()
-    return q
