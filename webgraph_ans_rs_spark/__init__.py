@@ -14,4 +14,6 @@ Nothing here is a port: all compression is delegated to Parquet encodings,
 all relational planning to Catalyst. See SURVEY.md §1.6 for the mapping.
 """
 
+from . import _zipcache  # noqa: F401  (every UDF worker imports the package)
+
 __version__ = "0.1.0"
